@@ -174,15 +174,12 @@ GROUP BY r_name
 
 def q_route_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
-    routes = spark.createDataFrame(
-        [
-            ("sink_all", "*", "*"),
-            ("sink_urgent", "o_orderpriority", "1-URGENT"),
-            ("sink_high", "o_orderpriority", "2-HIGH"),
-            ("sink_finished", "o_orderstatus", "F"),
-        ],
-        "sink_id string, predicate_col string, predicate_val string",
-    )
+    routes = [
+        ("sink_all", "*", "*", None, None),
+        ("sink_urgent", "o_orderpriority", "1-URGENT", None, None),
+        ("sink_high", "o_orderpriority", "2-HIGH", None, None),
+        ("sink_finished", "o_orderstatus", "F", None, None),
+    ]
     routed = route_explode(o, routes, predicate_cols=["o_orderpriority", "o_orderstatus"])
     return routed.groupBy("sink_id").agg(F.count(F.lit(1)).alias("n"))
 
@@ -472,14 +469,11 @@ FROM fan GROUP BY 1
 
 def q_route_fanout_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
-    routes = spark.createDataFrame(
-        [
-            ("sink_all", "*", "*"),
-            ("sink_urgent", "o_orderpriority", "1-URGENT"),
-            ("sink_finished", "o_orderstatus", "F"),
-        ],
-        "sink_id string, predicate_col string, predicate_val string",
-    )
+    routes = [
+        ("sink_all", "*", "*", None, None),
+        ("sink_urgent", "o_orderpriority", "1-URGENT", None, None),
+        ("sink_finished", "o_orderstatus", "F", None, None),
+    ]
     routed = route_explode(o, routes, predicate_cols=["o_orderpriority", "o_orderstatus"])
     return routed.select("sink_id", F.col("o_orderkey").alias("orderkey"))
 
@@ -3090,8 +3084,11 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces the pair-selection dedup.  Rows out: (doc_id, pos, fp) —
     identical selection to the shuffle-first form (pytest-pinned
     equivalence; driver value-hash unchanged)."""
-    d = _tp(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
+    # docs shorter than one gram have no fingerprints (the oracle's
+    # range(len(w) - k + 1) is empty); without the filter sequence()
+    # would count down and slice() would get index 0 and throw
+    d = _tp(spark, sf_dir, "documents").where(F.size(words) >= _WN_K)
     n_grams = F.size(words) - _WN_K + 1
     gram_structs = F.transform(
         F.sequence(F.lit(0), n_grams - 1),
@@ -4114,7 +4111,7 @@ def q_webtext_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the fixture generator (~3.7s of the r2 bench number was
     regeneration)."""
     from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint
-    from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup, routes_df
+    from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
 
     # reuse is keyed on a success marker written only AFTER the
     # generator job returns — a write killed mid-job leaves partition
@@ -4125,8 +4122,8 @@ def q_webtext_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.read.parquet(_ensure_webtext_fixture(spark))
     flow = build_routed(
         build_parsed(df).drop("html").join(F.broadcast(lang_lookup(spark)), "lang", "left"),
-        routes_df(spark),
         disjoint_tags=tags_disjoint(DEFAULT_SINKS),
+        sinks=DEFAULT_SINKS,
     )
     return flow.groupBy("sink_id").agg(F.count(F.lit(1)).alias("n"))
 

@@ -11,18 +11,16 @@ To make that achievable, decoding is pinned: utf-8, errors="strict"
 (generation writes valid utf-8), and extraction is a fixed
 DOTALL-regex over the decoded string.
 
-Two implementations with identical output:
-- pandas UDF (the north-star "vectorized pandas/Arrow UDF grok/regex
-  parse of the html byte column"): one pd.Series.str.extract per Arrow
-  batch — the regex runs in C over the whole batch, no per-row Python.
-- pure-JVM expressions (decode + regexp_extract) used by the DuckDB
-  oracle queries and as a cross-check.
+The parse is one Arrow-batched pandas UDF (make_full_extract_udf, the
+north-star "vectorized pandas/Arrow UDF grok/regex parse of the html
+byte column"): one pd.Series.str.extract per batch over a combined
+html-template + grok regex — the regex runs in C over the whole
+batch, no per-row Python.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -33,46 +31,31 @@ _EXTRACT_RE = (
     r"<body><p>(?P<text>.*?)</p><!--log: (?P<log_line>.*?) --></body></html>$"
 )
 
-_FIELDS_TYPE = T.StructType(
-    [
-        T.StructField("title", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("log_line", T.StringType()),
-    ]
-)
 
 
-@F.pandas_udf(_FIELDS_TYPE)
-def extract_html_fields(html: pd.Series) -> pd.DataFrame:
-    """binary html -> struct<title, text, log_line>; null fields when
-    the page does not match the template (P6: row is kept)."""
-    decoded = html.str.decode("utf-8")
-    return decoded.str.extract(_EXTRACT_RE)
-
-
-def make_full_extract_udf(grok_pattern: str, include_aux: bool = True):
+def make_full_extract_udf(grok_pattern: str):
     """ONE Arrow-batched UDF doing the whole parse stage: decode html,
-    extract title/text/log_line AND the grok fields of the embedded
-    access-log line in a single combined regex pass per batch.
+    extract the text AND the grok fields of the embedded access-log
+    line in a single combined regex pass per batch.
 
     Motivation (measured at 100k rows, local[32]): two chained pandas
-    UDFs (html fields, then grok on log_line) cost ~70s vs ~17s for
-    the pure-JVM path — the html payload crossed the Arrow boundary
-    twice and the regex scanned each page twice.  The combined UDF
-    crosses once and scans once; a second, cheaper pass handles only
-    the rows whose embedded line did NOT match the grok pattern
-    (template matches, log doesn't) so P6 passthrough still holds.
+    UDFs (html fields, then grok on log_line) cost ~70s vs ~17s for a
+    pure-JVM regexp_extract parse — the html payload crossed the Arrow
+    boundary twice and the regex scanned each page twice.  The
+    combined UDF crosses once and scans once; a second, cheaper pass
+    handles only the rows whose embedded line did NOT match the grok
+    pattern (template matches, log doesn't) so P6 passthrough still
+    holds.
 
-    include_aux=False drops title and log_line from the RETURNED
-    struct (they are still captured by the same regex pass).  Spark
-    does not push struct-field pruning into a Python UDF, so an unused
-    field still pays Python string assembly + Arrow serialization for
-    every row — ~210 bytes/row here, ~0.8 GB of memory traffic per 4M
-    rows.  The pipeline never emits title/log_line (FIXTURES §5 row
-    shape), so it uses the slim variant.
+    The returned struct omits title and log_line (the regex still
+    captures them).  Spark does not push struct-field pruning into a
+    Python UDF, so an unused field still pays Python string assembly +
+    Arrow serialization for every row — ~210 bytes/row here, ~0.8 GB
+    of memory traffic per 4M rows — and the pipeline row shape
+    (FIXTURES §5) never carries them.
 
-    Returns (udf, field_names) where the struct is
-    [title, log_line,] text + the grok fields.
+    Returns (udf, field_names) where the struct is text + the grok
+    fields.
     """
     from hetman_spark.operators.parse import grok_to_regex
 
@@ -83,8 +66,7 @@ def make_full_extract_udf(grok_pattern: str, include_aux: bool = True):
         r"(?s)^<html><head><title>(?P<title>.*?)</title></head>"
         r"<body><p>(?P<text>.*?)</p><!--log: (?P<log_line>" + inner + r") --></body></html>$"
     )
-    aux = ["title", "log_line"] if include_aux else []
-    all_fields = [*aux, "text", *grok_fields]
+    all_fields = ["text", *grok_fields]
     ret_type = T.StructType([T.StructField(f, T.StringType()) for f in all_fields])
 
     @F.pandas_udf(ret_type)
@@ -94,39 +76,8 @@ def make_full_extract_udf(grok_pattern: str, include_aux: bool = True):
         missed = out["text"].isna()
         if missed.any():
             # fallback: template may match even when the log line does
-            # not parse (P6: keep title/text, null grok fields)
-            fallback = decoded[missed].str.extract(_EXTRACT_RE)
-            for c in ("title", "text", "log_line"):
-                if c == "text" or include_aux:
-                    out.loc[missed, c] = fallback[c]
+            # not parse (P6: keep the text, null grok fields)
+            out.loc[missed, "text"] = decoded[missed].str.extract(_EXTRACT_RE)["text"]
         return out[all_fields]
 
     return full_extract, all_fields
-
-
-def extract_html_fields_jvm(html: Column) -> Column:
-    """Same extraction as pure Catalyst expressions (decode +
-    regexp_extract) — used for cross-checks and oracle parity."""
-    s = F.decode(html, "UTF-8")
-    # Java regex: inline DOTALL, positional groups.
-    jre = (
-        r"(?s)^<html><head><title>(.*?)</title></head>"
-        r"<body><p>(.*?)</p><!--log: (.*?) --></body></html>$"
-    )
-    return F.struct(
-        F.regexp_extract(s, jre, 1).alias("title"),
-        F.regexp_extract(s, jre, 2).alias("text"),
-        F.regexp_extract(s, jre, 3).alias("log_line"),
-    )
-
-
-def with_html_fields(df: DataFrame, html_col: str = "html", jvm: bool = False) -> DataFrame:
-    """Attach extracted title/text/log_line columns from the html payload."""
-    extractor = extract_html_fields_jvm(F.col(html_col)) if jvm else extract_html_fields(F.col(html_col))
-    return (
-        df.withColumn("_x", extractor)
-        .withColumn("title", F.col("_x.title"))
-        .withColumn("extracted_text", F.col("_x.text"))
-        .withColumn("log_line", F.col("_x.log_line"))
-        .drop("_x")
-    )

@@ -10,9 +10,9 @@ Here each format is a vectorized column transform:
 
 - nginx/grok: the $var pattern is translated to a regex once on the
   driver; extraction happens JVM-side with one regexp_extract per
-  field (whole-stage codegen, no Python), or in one pass per Arrow
-  batch via a pandas UDF (pd.Series.str.extract) — both produce the
-  same struct.
+  field (whole-stage codegen, no Python).  The webtext pipeline fuses
+  the same regex into its html parse (operators/html.py
+  make_full_extract_udf, one Arrow pass per batch).
 - JSON: from_json with an explicit all-string schema (production
   path — the "strings only" rule enforced by schema choice), plus a
   pandas UDF replicating the reference's dynamic strings-only filter
@@ -86,24 +86,6 @@ def parse_grok(line: Column, pattern: str) -> Column:
 
 def _grok_type(fields: list[str]) -> T.StructType:
     return T.StructType([T.StructField(f, T.StringType()) for f in fields])
-
-
-def make_grok_pandas_udf(pattern: str):
-    """Arrow-batched grok parse: one ``pd.Series.str.extract`` per
-    batch (the north-star "vectorized pandas/Arrow UDF" path — no
-    per-row Python; pandas runs the regex over the whole batch in C).
-
-    Returns (udf, field_names); udf(line) yields the same struct as
-    :func:`parse_grok`.
-    """
-    named, fields = grok_to_regex(pattern, named=True)
-    ret_type = _grok_type(fields)
-
-    @F.pandas_udf(ret_type)
-    def grok_udf(s: pd.Series) -> pd.DataFrame:
-        return s.str.extract(named)
-
-    return grok_udf, fields
 
 
 # ---------------------------------------------------------------------------

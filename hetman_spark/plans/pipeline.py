@@ -10,8 +10,7 @@ append manifest entry".
 
 Stages and their reference analogs:
   read parquet (pruned by manifest anti-join) . tailer + offset seek
-  extract_html_fields (pandas UDF)            . Parser.Run (P1)
-  grok parse of the embedded log line         . Parser.Run (P1)
+  make_full_extract_udf (Arrow html+grok)     . Parser.Run (P1)
   apply_modifier                              . Modifier.Run (M1-M3)
   enrich_with_lookup (salted + broadcast)     . add-fields w/ lookup
   route_explode + with_sink_tags              . Modifier fan-out + Loki
@@ -39,20 +38,15 @@ from pyspark.sql import functions as F
 
 from hetman_spark.config import ModifierConfig, SinkConfig
 from hetman_spark.operators.enrich import enrich_with_lookup
-from hetman_spark.operators.html import make_full_extract_udf, with_html_fields
+from hetman_spark.operators.html import make_full_extract_udf
 from hetman_spark.operators.modify import apply_modifier
-from hetman_spark.operators.parse import parse_grok
-from hetman_spark.operators.route import (
-    route_explode,
-    route_explode_static,
-    with_sink_tags,
-)
+from hetman_spark.operators.route import route_explode, with_sink_tags
 from hetman_spark.plans.checkpoint import (
     append_batch_metrics,
     commit_split,
     committed_splits,
 )
-from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup, routes_df
+from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup, route_rows
 
 # nginx combined-log pattern for the embedded access-log line
 # (reference pattern: /root/reference/internal/parser/parser_test.go:94)
@@ -80,48 +74,27 @@ class PipelineResult:
     phase_secs: dict[str, float] = field(default_factory=dict)
 
 
-def build_parsed(
-    df: DataFrame,
-    modifier: ModifierConfig | None = None,
-    use_pandas_udf: bool = True,
-    keep_aux: bool = False,
-) -> DataFrame:
+def build_parsed(df: DataFrame, modifier: ModifierConfig | None = None) -> DataFrame:
     """parse + modify (narrow stages only — no shuffle).
 
     Produces columns: url, warc_ts, lang, split_id, extracted_text,
-    parsed (map), parse_ok, status_class — plus title and log_line
-    when keep_aux=True.  The pipeline row shape (FIXTURES §5) never
-    includes title/log_line, and a pandas UDF pays Arrow serialization
-    for every returned field whether or not Catalyst prunes it later,
-    so the default skips them (~210 B/row of Arrow traffic saved).
+    parsed (map), parse_ok, status_class.
     """
-    # --- parse stage (vectorized; no per-row Python) ---
-    log_fields = LOG_FIELDS
-    if use_pandas_udf:
-        # single Arrow round-trip: html -> text [+aux] + grok fields
-        # in one combined regex pass (see make_full_extract_udf)
-        full_udf, _ = make_full_extract_udf(NGINX_PATTERN, include_aux=keep_aux)
-        df = df.withColumn("_x", full_udf(F.col("html")))
-        if keep_aux:
-            df = df.withColumn("title", F.col("_x.title")).withColumn(
-                "log_line", F.col("_x.log_line")
-            )
-        df = (
-            df.withColumn("extracted_text", F.col("_x.text"))
-            .withColumn(
-                "_log",
-                F.when(
-                    F.col("_x.status").isNotNull(),
-                    F.struct(*[F.col(f"_x.{f}").alias(f) for f in log_fields]),
-                ),
-            )
-            .drop("_x")
+    # --- parse stage: single Arrow round-trip, html -> text + grok
+    # fields in one combined regex pass (see make_full_extract_udf) ---
+    full_udf, _ = make_full_extract_udf(NGINX_PATTERN)
+    df = (
+        df.withColumn("_x", full_udf(F.col("html")))
+        .withColumn("extracted_text", F.col("_x.text"))
+        .withColumn(
+            "_log",
+            F.when(
+                F.col("_x.status").isNotNull(),
+                F.struct(*[F.col(f"_x.{f}").alias(f) for f in LOG_FIELDS]),
+            ),
         )
-    else:
-        df = with_html_fields(df, "html", jvm=True)
-        df = df.withColumn("_log", parse_grok(F.col("log_line"), NGINX_PATTERN))
-        if not keep_aux:
-            df = df.drop("title", "log_line")
+        .drop("_x")
+    )
     # parsed map (hetman's Parsed map[string]string); null-safe (P6)
     df = (
         df.withColumn(
@@ -129,8 +102,8 @@ def build_parsed(
             F.when(
                 F.col("_log").isNotNull() & F.col("_log.status").isNotNull(),
                 F.map_from_arrays(
-                    F.array(*[F.lit(f) for f in log_fields]),
-                    F.array(*[F.col(f"_log.{f}") for f in log_fields]),
+                    F.array(*[F.lit(f) for f in LOG_FIELDS]),
+                    F.array(*[F.col(f"_log.{f}") for f in LOG_FIELDS]),
                 ),
             ),
         )
@@ -153,24 +126,6 @@ def build_parsed(
     return df
 
 
-def build_enriched(
-    df: DataFrame,
-    lookup: DataFrame,
-    modifier: ModifierConfig | None = None,
-    salt_buckets: int = 8,
-    use_pandas_udf: bool = True,
-) -> DataFrame:
-    """parse + modify + enrich with the literal pre-enrich salted
-    repartition (north_rule wording).  The scale-optimal default path
-    in run_pipeline instead does the broadcast enrich narrow and lets
-    the single write-side REBALANCE handle skew (AQE splits oversized
-    partitions — salting, chosen at runtime); this variant stays for
-    the non-broadcastable-lookup case and is exercised by tests and
-    the --presalt CLI flag."""
-    parsed = build_parsed(df, modifier=modifier, use_pandas_udf=use_pandas_udf)
-    return enrich_with_lookup(parsed, lookup, on="lang", salt_buckets=salt_buckets, salt_from="url")
-
-
 LOG_FIELDS = ["remote_addr", "remote_user", "time_local", "request",
               "status", "bytes_sent", "referrer", "user_agent"]
 
@@ -190,25 +145,18 @@ def tags_disjoint(
     return all(not (set(s.add_tags) & reserved) for s in sinks)
 
 
+ROUTE_COLS = ["lang", "status_class", "region"]
+
+
 def build_routed(
     enriched: DataFrame,
-    routes: DataFrame | None,
+    routes: DataFrame | None = None,  # unused; the benchmark harness passes routes_df
     disjoint_tags: bool = False,
-    sinks: tuple[SinkConfig, ...] | None = None,
+    sinks: tuple[SinkConfig, ...] = DEFAULT_SINKS,
 ) -> DataFrame:
     """Router + per-record sink tags; output row shape per FIXTURES §5:
-    (sink_id, url, warc_ts, text, tags, split_id, lang).
-
-    When the sink list is known driver-side (always, in run_pipeline)
-    pass `sinks` — the router inlines the predicates and stays in
-    codegen (route_explode_static); `routes` as a DataFrame remains
-    the dynamic-table path."""
-    if sinks is not None:
-        routed = route_explode_static(
-            enriched, sinks, predicate_cols=["lang", "status_class", "region"]
-        )
-    else:
-        routed = route_explode(enriched, routes, predicate_cols=["lang", "status_class", "region"])
+    (sink_id, url, warc_ts, text, tags, split_id, lang)."""
+    routed = route_explode(enriched, route_rows(sinks), predicate_cols=ROUTE_COLS)
     routed = with_sink_tags(routed, parsed_col="parsed", labels_col="labels",
                             source_col="url", disjoint=disjoint_tags)
     return routed.select(
@@ -357,7 +305,6 @@ def run_pipeline(
     salt_buckets: int = 8,
     splits_per_commit: int = 64,
     max_splits: int | None = None,
-    use_pandas_udf: bool = True,
     presalt: bool = False,
     labeled_input_path: str | None = None,
     config_reload_path: str | None = None,
@@ -447,7 +394,6 @@ def run_pipeline(
         todo = todo[:max_splits]
 
     lookup = lang_lookup(spark)
-    routes = routes_df(spark, sinks)
     result = PipelineResult()
 
     for i in range(0, len(todo), splits_per_commit):
@@ -477,7 +423,6 @@ def run_pipeline(
                 else:
                     if spec.sinks:
                         sinks = spec.sinks
-                        routes = routes_df(spark, sinks)
                     modifier = spec.modifier
             except Exception:
                 # keep the previous config, as the reference does — but
@@ -508,7 +453,7 @@ def run_pipeline(
         # cores (measured: cache materialization dominated the
         # non-scaling fraction).  The parse is recomputed for the one
         # lineage agg job instead — CPU that scales linearly.
-        parsed = build_parsed(df, modifier=modifier, use_pandas_udf=use_pandas_udf).drop("html")
+        parsed = build_parsed(df, modifier=modifier).drop("html")
 
         # A3/A4 per-stage counters: observations ride the write job
         # (map-side aggregated by the executor metrics system, zero
@@ -646,7 +591,7 @@ def run_pipeline(
         # labels from a push source are data-dependent -> the
         # driver-validated disjoint fast path is off in that mode
         routed = build_routed(
-            enrich(rebalanced), routes,
+            enrich(rebalanced),
             disjoint_tags=not labeled_input_path and tags_disjoint(sinks, modifier),
             sinks=sinks,
         )
@@ -673,35 +618,27 @@ def run_pipeline(
         _t1 = _time.time()
         result.phase_secs["write_job"] = result.phase_secs.get("write_job", 0.0) + (_t1 - _t0)
         p_metrics = obs_parse.get
-        r_metrics = obs_route.get
-        stage_pairs = [
-            ("source.rows_in", p_metrics["rows_in"]),
-            ("parse.rows_parsed", p_metrics["rows_parsed"]),
-            ("parse.errors", p_metrics["rows_in"] - p_metrics["rows_parsed"]),
-            ("route.rows_routed", r_metrics["rows_routed"]),
-        ]
+        rows_in = p_metrics["rows_in"] or 0
+        # one per-batch stage-count dict: summed into the result AND
+        # written to the batch metrics feed below
+        batch_counts = {
+            "source.rows_in": rows_in,
+            "parse.rows_parsed": p_metrics["rows_parsed"] or 0,
+            "parse.errors": rows_in - (p_metrics["rows_parsed"] or 0),
+            "route.rows_routed": obs_route.get["rows_routed"] or 0,
+        }
         if obs_dedup is not None:
-            stage_pairs.append(
-                ("dedup.dropped",
-                 (p_metrics["rows_in"] or 0) - (obs_dedup.get["rows_kept"] or 0))
-            )
+            batch_counts["dedup.dropped"] = rows_in - (obs_dedup.get["rows_kept"] or 0)
         if obs_neardup is not None:
             # input to the near-dup stage = exact-dedup survivors when
             # both stages run, else the raw parse output
-            nd_in = (
-                (obs_dedup.get["rows_kept"] or 0)
-                if obs_dedup is not None
-                else (p_metrics["rows_in"] or 0)
-            )
-            stage_pairs.append(
-                ("neardup.dropped", nd_in - (obs_neardup.get["rows_kept"] or 0))
-            )
+            nd_in = (obs_dedup.get["rows_kept"] or 0) if obs_dedup is not None else rows_in
+            batch_counts["neardup.dropped"] = nd_in - (obs_neardup.get["rows_kept"] or 0)
         if obs_pii is not None:
-            stage_pairs.append(
-                ("pii.docs_masked", obs_pii.get["docs_masked"] or 0)
-            )
-        for key, val in stage_pairs:
-            result.stage_counts[key] = result.stage_counts.get(key, 0) + int(val or 0)
+            batch_counts["pii.docs_masked"] = obs_pii.get["docs_masked"] or 0
+        batch_counts = {k: int(v) for k, v in batch_counts.items()}
+        for key, val in batch_counts.items():
+            result.stage_counts[key] = result.stage_counts.get(key, 0) + val
 
         # lineage (A1/A2): per-split in/parsed/routed counts.  With a
         # match-all sink (the common config — hetman forwarders each
@@ -714,9 +651,7 @@ def run_pipeline(
         if matchall:
             in_counts, per_split_routes = _footer_lineage(data_dir, batch, matchall[0])
         else:
-            routed_l = route_explode_static(
-                enrich(flowed), sinks,
-                predicate_cols=["lang", "status_class", "region"])
+            routed_l = route_explode(enrich(flowed), route_rows(sinks), predicate_cols=ROUTE_COLS)
             stats_df = routed_l.groupBy("split_id", "sink_id").agg(
                 F.count(F.lit(1)).alias("n"),
             )
@@ -773,28 +708,7 @@ def run_pipeline(
             os.path.join(out_dir, "_metrics"),
             {
                 "splits": batch,
-                "stage_counts": {
-                    "source.rows_in": int(p_metrics["rows_in"] or 0),
-                    "parse.rows_parsed": int(p_metrics["rows_parsed"] or 0),
-                    "parse.errors": int(
-                        (p_metrics["rows_in"] or 0) - (p_metrics["rows_parsed"] or 0)
-                    ),
-                    "route.rows_routed": int(r_metrics["rows_routed"] or 0),
-                    **(
-                        {"dedup.dropped": int(
-                            (p_metrics["rows_in"] or 0)
-                            - (obs_dedup.get["rows_kept"] or 0))}
-                        if obs_dedup is not None else {}
-                    ),
-                    **(
-                        {"neardup.dropped": int(
-                            ((obs_dedup.get["rows_kept"] or 0)
-                             if obs_dedup is not None
-                             else (p_metrics["rows_in"] or 0))
-                            - (obs_neardup.get["rows_kept"] or 0))}
-                        if obs_neardup is not None else {}
-                    ),
-                },
+                "stage_counts": batch_counts,
                 "sink_counts": dict(sorted(batch_routes.items())),
                 "phase_secs": {
                     "write_job": round(_t1 - _t0, 3),

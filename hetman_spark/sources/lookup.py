@@ -62,14 +62,19 @@ DEFAULT_SINKS: tuple[SinkConfig, ...] = (
 )
 
 
-def routes_df(spark: SparkSession, sinks: tuple[SinkConfig, ...] = DEFAULT_SINKS) -> DataFrame:
-    """Routing table: (sink_id, predicate_col, predicate_val, add_tags, format)."""
-    rows = [
+def route_rows(sinks: tuple[SinkConfig, ...]) -> list[tuple]:
+    """Routing table rows, as operators/route.py route_explode takes
+    them: (sink_id, predicate_col, predicate_val, add_tags, format)."""
+    return [
         (s.signature(), s.predicate_col, s.predicate_val, s.add_tags, s.format)
         for s in sinks
     ]
+
+
+def routes_df(spark: SparkSession, sinks: tuple[SinkConfig, ...] = DEFAULT_SINKS) -> DataFrame:
+    """Routing table as a DataFrame (the route_rows columns)."""
     return spark.createDataFrame(
-        rows,
+        route_rows(sinks),
         "sink_id string, predicate_col string, predicate_val string, "
         "add_tags map<string,string>, format string",
     )

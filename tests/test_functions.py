@@ -789,10 +789,12 @@ def test_winnow_fingerprints_guarantees(spark, sf_dir):
             assert any(i <= p < i + _WN_W for p in positions), (doc_id, i)
     assert total_sel / total_grams < 0.6  # sketch, not the full stream
 
-    # shared-substring guarantee on a constructed pair
+    # shared-substring guarantee on a constructed pair; docs shorter
+    # than k words (no gram) or than w grams (no window) yield nothing
     shared = "alpha beta gamma delta epsilon zeta eta theta"
     df = spark.createDataFrame(
-        [(900001, "xx yy " + shared), (900002, shared + " qq rr ss tt")],
+        [(900001, "xx yy " + shared), (900002, shared + " qq rr ss tt"),
+         (900003, "two words"), (900004, "just four words here")],
         "doc_id long, text string",
     )
     import tempfile, os
@@ -803,6 +805,7 @@ def test_winnow_fingerprints_guarantees(spark, sf_dir):
     for r in out:
         fps.setdefault(r["doc_id"], set()).add(r["fp"])
     assert fps[900001] & fps[900002]
+    assert 900003 not in fps and 900004 not in fps
 
 
 def test_ivfpq_neighbors_come_from_probed_cells(spark, sf_dir):

@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 
 from hetman_spark.operators.parse import (
     grok_to_regex,
-    make_grok_pandas_udf,
     parse_grok,
     parse_json_dynamic,
     parse_json_static,
@@ -57,10 +56,21 @@ def test_nginx_parse_jvm(spark):
 
 
 def test_nginx_parse_pandas_udf(spark):
-    udf, fields = make_grok_pandas_udf(NGINX_PATTERN)
-    df = spark.createDataFrame([(NGINX_LINE,)], "line string")
-    row = _one(df.select(udf(F.col("line")).alias("p")))
-    assert row.asDict() == NGINX_EXPECTED
+    """The pipeline's fused Arrow parse (html text + grok fields) gives
+    the golden map for a page embedding NGINX_LINE; a page whose log
+    line does not parse keeps its text with null grok fields (P6)."""
+    from hetman_spark.operators.html import make_full_extract_udf
+
+    udf, _ = make_full_extract_udf(NGINX_PATTERN)
+    page = "<html><head><title>t</title></head><body><p>{}</p><!--log: {} --></body></html>"
+    df = spark.createDataFrame(
+        [(0, bytearray(page.format("hello", NGINX_LINE).encode())),
+         (1, bytearray(page.format("kept", "not an access log").encode()))],
+        "id int, html binary",
+    )
+    ok, bad = [r["p"].asDict() for r in df.orderBy("id").select(udf(F.col("html")).alias("p")).collect()]
+    assert ok == {"text": "hello", **NGINX_EXPECTED}
+    assert bad == {"text": "kept", **dict.fromkeys(NGINX_EXPECTED)}
 
 
 def test_nginx_parse_failure_is_null_not_dropped(spark):

@@ -391,6 +391,11 @@ def test_pipeline_redact_pii_stage(spark, tmp_path):
     ).DEFAULT_SINKS if s.predicate_col == "*"][0]
     assert res.sink_counts[matchall] == 300  # scrub never drops rows
     assert res.stage_counts["pii.docs_masked"] == 50
+    # the per-batch metrics feed carries the same counter
+    from hetman_spark.plans.checkpoint import read_batch_metrics
+
+    batches = read_batch_metrics(str(tmp_path / "out_pii" / "_metrics"))
+    assert sum(b["stage_counts"].get("pii.docs_masked", 0) for b in batches) == 50
 
     out = spark.read.parquet(str(tmp_path / "out_pii" / "data"))
     assert out.filter(F.col("text").contains("@example.com")).count() == 0

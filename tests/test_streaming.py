@@ -42,6 +42,14 @@ def test_windowed_counts(spark, tmp_path):
     assert rows[0]["total"] == 500
 
 
+def _drain(q) -> None:
+    """Run a query until its available input is processed, then stop it."""
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
 def test_stateful_multiline_stream(spark, tmp_path):
     """P5 streaming twin: anchors flush on next anchor; the pending
     tail flushes when more data (or timeout) arrives."""
@@ -67,33 +75,44 @@ def test_stateful_multiline_stream(spark, tmp_path):
     # long timeout so the state-retention assertions below aren't
     # flushed by the (working) processing-time timeout during slow runs
     out = stitch_multiline_stream(lines, r"^\s", timeout_ms=3_600_000)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory").queryName("stitched")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["file_id"], r["line_no"]): r["line"]
-        for r in spark.sql("SELECT * FROM stitched").collect()
-    }
-    # the ERROR anchor + its two continuations flushed by the INFO anchor
-    assert got[("f1", 0)] == "ERROR boom  at a.b.c  at d.e.f"
-    # INFO and WARN are still pending in state (no following anchor yet)
-    assert ("f1", 3) not in got and ("f2", 0) not in got
+    # While state holds a pending processing-time timeout, Spark runs a
+    # no-data micro-batch on every trigger, so neither availableNow
+    # termination nor processAllAvailable ever sees the input drained.
+    # The timeout (an hour) never fires within this test, so turning
+    # no-data batches off for these two queries changes no result.
+    no_data_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev_no_data = spark.conf.get(no_data_key)
+    spark.conf.set(no_data_key, "false")
+    try:
+        q = (
+            out.writeStream.outputMode("append")
+            .format("memory").queryName("stitched")
+            .trigger(availableNow=True)
+            .start()
+        )
+        _drain(q)
+        got = {
+            (r["file_id"], r["line_no"]): r["line"]
+            for r in spark.sql("SELECT * FROM stitched").collect()
+        }
+        # the ERROR anchor + its two continuations flushed by the INFO anchor
+        assert got[("f1", 0)] == "ERROR boom  at a.b.c  at d.e.f"
+        # INFO and WARN are still pending in state (no following anchor yet)
+        assert ("f1", 3) not in got and ("f2", 0) not in got
 
-    # feed a second batch: new anchors flush the pending ones
-    rows2 = [("f1", 4, "NEXT"), ("f2", 1, "NEXT")]
-    spark.createDataFrame(rows2, schema).coalesce(1).write.mode("append").parquet(src_dir)
-    q2 = (
-        out.writeStream.outputMode("append")
-        .format("memory").queryName("stitched2")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
+        # feed a second batch: new anchors flush the pending ones
+        rows2 = [("f1", 4, "NEXT"), ("f2", 1, "NEXT")]
+        spark.createDataFrame(rows2, schema).coalesce(1).write.mode("append").parquet(src_dir)
+        q2 = (
+            out.writeStream.outputMode("append")
+            .format("memory").queryName("stitched2")
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        _drain(q2)
+    finally:
+        spark.conf.set(no_data_key, prev_no_data)
     got2 = {
         (r["file_id"], r["line_no"]): r["line"]
         for r in spark.sql("SELECT * FROM stitched2").collect()
