@@ -422,10 +422,10 @@ def main(argv: list[str] | None = None) -> int:
         ).collect()[0]
         # near-identical by order-sensitive rolling fingerprint (token
         # sequence equal, not just token set)
-        from hetman_spark.functions.dedup import simhash_md5
+        from hetman_spark.functions.dedup import simhash
 
         simhash_dupes = (
-            docs.select(simhash_md5(F.col("text")).alias("sh"))
+            docs.select(simhash(F.col("text")).alias("sh"))
             .groupBy("sh").agg(F.count(F.lit(1)).alias("n"))
             .filter("n > 1")
             .agg(F.coalesce(F.sum(F.col("n") - 1), F.lit(0)).alias("r"))

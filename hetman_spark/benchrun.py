@@ -95,7 +95,7 @@ def _dedup_bench(spark, master: str, rows: int, scratch: str, reps: int = 3) -> 
     one-word-shifted copies), giving connected_components real merge
     work, not an empty graph.  Reports min-of-reps for (a) the banded
     LSH candidate join alone and (b) dedup_clusters end-to-end (LSH
-    materialization + CC rounds), plus CC round/check counts."""
+    materialization + CC rounds), plus the CC round count."""
     from pyspark.sql import functions as F
 
     from hetman_spark.functions.dedup import (
@@ -135,7 +135,6 @@ def _dedup_bench(spark, master: str, rows: int, scratch: str, reps: int = 3) -> 
         "master": master, "mode": "dedup",
         "rows": rows, "n_pairs": n_pairs, "n_nodes": n_nodes,
         "cc_rounds": cc_stats.get("rounds"),
-        "cc_checks": cc_stats.get("checks"),
         "lsh_secs": [round(s, 2) for s in lsh_secs],
         "cc_secs": [round(s, 2) for s in cc_secs],
         "lsh_sec": round(min(lsh_secs), 2),

@@ -14,9 +14,10 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hetman_spark.functions.dedup import MD5_MINHASH_SALTS
 from hetman_spark.operators.multiline import stitch_multiline
 from hetman_spark.operators.parse import parse_grok
 from hetman_spark.operators.route import route_explode
@@ -255,15 +256,12 @@ FROM documents GROUP BY md5(text)
 # Dedup: MinHash signatures (md5-based so both engines agree bit-for-bit)
 # ---------------------------------------------------------------------------
 
-_MINHASH_SALTS = ["s0", "s1", "s2", "s3"]
-
-
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _tp(spark, sf_dir, "documents")
     words = d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("w"))
     aggs = [
         F.min(F.md5(F.concat(F.col("w"), F.lit(s)))).alias(f"mh_{s}")
-        for s in _MINHASH_SALTS
+        for s in MD5_MINHASH_SALTS
     ]
     return words.groupBy("doc_id").agg(*aggs)
 
@@ -646,7 +644,13 @@ def q_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus side streams through map-side — no corpus shuffle.  A
     (corpus, eval) pair's n_shared counts DISTINCT shared shingles,
     which is a plain count(*) here because shingles() emits distinct
-    grams per doc."""
+    grams per doc.
+
+    Precision trade: the join key is one 64-bit xxhash64 per shingle,
+    so a collision between an eval and a corpus shingle would add one
+    to n_shared (~n_eval * n_corpus / 2^64 expected false matches).
+    The entry only counts overlap; a decontamination pass that drops
+    docs on it should confirm matches on the shingle text."""
     from hetman_spark.functions.dedup import shingles
 
     d = _tp(spark, sf_dir, "documents")
@@ -714,7 +718,12 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc trigram repetition: total trigram occurrences vs
     distinct trigrams; n_repeated = total - distinct is the Gopher
     'duplicate n-gram' numerator.  Pure per-row array expressions —
-    no shuffle, no explode."""
+    no shuffle, no explode.
+
+    Precision trade: distinct trigrams are counted over one 64-bit
+    xxhash64 per gram, so a collision inside one doc would undercount
+    n_distinct by one.  Within a doc's few thousand grams the chance
+    is ~1e-13; the stat only counts, nothing is removed on it."""
     d = _tp(spark, sf_dir, "documents")
     words = F.split(F.lower(F.col("text")), r"\s+")
     k = F.size(words) - F.lit(2)
@@ -775,7 +784,9 @@ def q_minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pair via an equi-join on (band, bucket) — the same shape as
     functions/dedup.py:minhash_lsh_candidates, so the plan is a hash join
     that shuffles only (doc_id, band, bucket), never the n^2 cross product.
-    A pair colliding in both bands appears once (distinct).
+    A pair colliding in both bands appears once (distinct).  The band
+    table is functions/dedup.py:md5_minhash_bands and the join is its
+    bucket_pairs, uncapped because the DuckDB twin has no cap.
 
     Signatures hash 3-gram SHINGLES, not words: the synthetic corpus
     draws from a ~30-word vocabulary, so word-level minhashes collide
@@ -784,58 +795,20 @@ def q_minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard verify).  The 3-gram space is large enough that only real
     near-dups share buckets — the same reason functions/dedup.py
     shingles before minhashing."""
+    from hetman_spark.functions.dedup import bucket_pairs, md5_minhash_bands
+
+    return bucket_pairs(
+        md5_minhash_bands(_doc_shingles(spark, sf_dir)), ["band", "bucket"], None
+    )
+
+
+def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id, sh): each document's distinct 3-gram shingle set, the input
+    of md5_minhash_bands."""
     from hetman_spark.functions.dedup import shingles
 
     d = _tp(spark, sf_dir, "documents")
-    sh = d.select("doc_id", shingles(F.col("text"), 3).alias("sh"))
-    return _band_pairs_from_shingles(sh)
-
-
-def _bands_from_shingles(sh: DataFrame) -> DataFrame:
-    """(doc_id, sh: array<string>) -> (doc_id, band, bucket) band-key
-    rows.  min(md5) per salt is computed as array_min over a per-row
-    transform — pure expressions, NO explode+groupBy shuffle
-    (lexicographic min over the same md5 set, identical to the DuckDB
-    unnest+min twin).  This IS the persistable LSH signature table of
-    the incremental path."""
-
-    def msig(salt: str):
-        # closure, not a default-arg lambda (2-param transform lambdas
-        # are (element, index) — see CLAUDE.md)
-        return F.array_min(
-            F.transform(F.col("sh"), lambda w: F.md5(F.concat(w, F.lit(salt))))
-        )
-
-    sigs = sh.select(
-        "doc_id", *[msig(s).alias(f"m{i}") for i, s in enumerate(_MINHASH_SALTS)]
-    )
-    return sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("band"), F.md5(F.concat("m0", "m1")).alias("bucket")),
-                F.struct(F.lit(1).alias("band"), F.md5(F.concat("m2", "m3")).alias("bucket")),
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket"))
-
-
-def _band_pairs_from_shingles(sh: DataFrame) -> DataFrame:
-    """(doc_id, sh) -> candidate pairs via the banded self-join; the
-    only shuffle is the tiny (band, bucket, doc_id) equi-join."""
-    # Materialize the tiny (doc_id, band, bucket) table: it feeds BOTH
-    # sides of the self-join, and a DataFrame referenced twice re-runs
-    # its whole plan twice (no cross-reference CSE) — without this the
-    # shingle+md5-minhash pass executed 2x (the minhash_lsh_candidates
-    # lesson, guide §2.4: don't recompute what one exchange can carry).
-    bands = _bands_from_shingles(sh).localCheckpoint(eager=True)
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
+    return d.select(F.col("doc_id").alias("id"), shingles(F.col("text"), 3).alias("sh"))
 
 
 # DuckDB twin of hetman_spark.functions.dedup.shingles (3-gram,
@@ -845,7 +818,7 @@ _SQL_SHINGLES = _sql_shingles_n(3)
 
 # shared CTE chain: shingles -> md5 minhash signatures -> 2 bands
 # (the band table is the persistable LSH signature table — the DuckDB
-# twin of _bands_from_shingles)
+# twin of functions/dedup.py:md5_minhash_bands)
 _SQL_BANDS_CTES = f"""sh AS ({_SQL_SHINGLES}),
 sigs AS (
   SELECT doc_id,
@@ -899,22 +872,20 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions/dedup.py:ngram_jaccard with integer outputs.
 
     The shingle frame is built ONCE and feeds both the candidate
-    derivation (_band_pairs_from_shingles) and the two verify joins —
-    previously this entry re-invoked q_minhash_band_pairs, paying the
-    shingle+signature computation twice (VERDICT r2 What's-wrong #3)."""
-    from hetman_spark.functions.dedup import shingles
+    derivation (md5_minhash_bands + bucket_pairs) and the two verify
+    joins — previously this entry re-invoked q_minhash_band_pairs,
+    paying the shingle+signature computation twice (VERDICT r2
+    What's-wrong #3)."""
+    from hetman_spark.functions.dedup import bucket_pairs, md5_minhash_bands
 
-    d = _tp(spark, sf_dir, "documents")
     # materialize the shingle table once: it feeds the band derivation
     # AND both verify joins (3 references = 3 re-executions of the
     # split+slice+distinct pass without this; guide §2.4)
-    sh = d.select(
-        F.col("doc_id"), shingles(F.col("text"), 3).alias("sh")
-    ).localCheckpoint(eager=True)
-    pairs = _band_pairs_from_shingles(sh)
+    sh = _doc_shingles(spark, sf_dir).localCheckpoint(eager=True)
+    pairs = bucket_pairs(md5_minhash_bands(sh), ["band", "bucket"], None)
     out = (
-        pairs.join(sh.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
+        pairs.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
+        .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("long")
@@ -951,12 +922,14 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected_components — min-label propagation + pointer jumping as
     keyed self-joins, O(log n) rounds; the oracle recomputes the
     transitive closure independently with a DuckDB recursive CTE."""
-    from hetman_spark.functions.dedup import connected_components, shingles
+    from hetman_spark.functions.dedup import (
+        bucket_pairs,
+        connected_components,
+        md5_minhash_bands,
+    )
 
-    d = _tp(spark, sf_dir, "documents")
-    sh = d.select("doc_id", shingles(F.col("text"), 3).alias("sh"))
-    pairs = _band_pairs_from_shingles(sh)
-    cc = connected_components(pairs)
+    bands = md5_minhash_bands(_doc_shingles(spark, sf_dir))
+    cc = connected_components(bucket_pairs(bands, ["band", "bucket"], None))
     return cc.select(
         F.col("v").alias("doc_id"),
         F.col("component").alias("cluster_id"),
@@ -1077,38 +1050,29 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-internal structure, and corpus-free components contain only
     in-batch edges.
 
-    Scale shape: two bucketed equi-joins of (doc_id, band, bucket)
-    rows + O(log n) CC rounds of (id, label) pairs; text never
-    shuffles.  At 100 TB the existing band table is bucketed on
-    (band, bucket), making the new-vs-old join co-located."""
-    from hetman_spark.functions.dedup import connected_components, shingles
+    Both edge kinds are the band pairs (id_a < id_b) whose id_b is an
+    incoming doc: id_a < 250 is a cross edge, id_a >= 250 an in-batch
+    one.  connected_components symmetrizes edges, so their orientation
+    does not matter.
 
+    Scale shape: one bucketed equi-join of (id, band, bucket) rows
+    (filtered to incoming right sides) + O(log n) CC rounds of (id,
+    label) pairs; text never shuffles.  At 100 TB the existing band
+    table is bucketed on (band, bucket), making the join co-located.
+    The band table is materialized once inside md5_minhash_bands —
+    it IS the persisted band table of the production incremental
+    path (measured 8.5 s -> ~3 s at sf1.0 against recomputing it per
+    join side)."""
+    from hetman_spark.functions.dedup import (
+        bucket_pairs,
+        connected_components,
+        md5_minhash_bands,
+    )
+
+    bands = md5_minhash_bands(_doc_shingles(spark, sf_dir))
+    edges = bucket_pairs(bands, ["band", "bucket"], None).where(F.col("id_b") >= 250)
+    cc = connected_components(edges)
     d = _tp(spark, sf_dir, "documents")
-    sh = d.select("doc_id", shingles(F.col("text"), 3).alias("sh"))
-    # materialize once: old_b/new_b below reference this table FOUR
-    # times (cross joins old+new, in_batch self-joins new twice) and
-    # each reference re-executes the shingle+signature pass — measured
-    # 8.5 s -> ~3 s at sf1.0 with the checkpoint (tiny: 2 rows/doc of
-    # (id, band, bucket); this IS the persisted band table of the
-    # production incremental path, so materializing it is the honest
-    # plan shape, not a bench trick)
-    bands = _bands_from_shingles(sh).localCheckpoint(eager=True)
-    old_b = bands.where(F.col("doc_id") < 250)
-    new_b = bands.where(F.col("doc_id") >= 250)
-    cross = (
-        new_b.alias("n")
-        .join(old_b.alias("o"), ["band", "bucket"])
-        .select(F.col("n.doc_id").alias("id_a"), F.col("o.doc_id").alias("id_b"))
-        .distinct()
-    )
-    in_batch = (
-        new_b.alias("a")
-        .join(new_b.alias("b"), ["band", "bucket"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    cc = connected_components(cross.unionByName(in_batch))
     incoming = d.where(F.col("doc_id") >= 250).select("doc_id")
     out = incoming.join(cc, incoming["doc_id"] == cc["v"], "left")
     status = (
@@ -1148,7 +1112,14 @@ def q_span_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(hash) with an early HAVING filter, and the rejoin is
     keyed on the hash — no sort, no suffix array, no cross join; this
     is exactly how production replaces Lee's suffix automaton at
-    cluster scale."""
+    cluster scale.
+
+    Precision trade: grams are keyed on ONE 64-bit xxhash64, so two
+    different spans that collide would count as one duplicated gram.
+    The expected number of colliding pairs among n distinct grams is
+    about n^2 / 2^65 (~3e-8 at a billion grams), and this entry only
+    counts — span_dedup_text, which deletes words, keys on two
+    hashes."""
     d = _tp(spark, sf_dir, "documents")
     k = _SPAN_K
     words = F.split(F.lower(F.col("text")), r"\s+")
@@ -1273,51 +1244,69 @@ def q_span_dedup_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     every duplicated span survives exactly once corpus-wide (modulo
     overlap with other removed spans).
 
+    A gram's identity is 128 bits: two independently seeded xxhash64
+    values of the same word slice (g1, g2).  Removal deletes words, so
+    it must not rest on one 64-bit hash — a collision between two
+    different spans would cut text that occurs once.  The count-only
+    span_dup_stats, repetition_stats and contamination_overlap keep a
+    single 64-bit key.
+
     Scale shape: one posexplode (linear in corpus token positions),
-    one groupBy(gram) carrying (count, min packed (doc,pos) key) — a
-    partial-agg shuffle keyed on the hash — one keyed join back, one
-    per-doc collect_set of removed word indexes (bounded by the doc's
-    own length), and a per-row array filter to rebuild the text.  No
-    suffix array, no global sort, text never rides a shuffle (only
-    32-char gram hashes and integer positions do).  The packed key
-    doc_id*1e6+pos assumes docs < 1e6 tokens (asserted in the
+    one groupBy(g1, g2) carrying (count, min packed (doc,pos) key) — a
+    partial-agg shuffle keyed on the hash pair — one keyed join back,
+    one per-doc collect_set of removed word indexes (bounded by the
+    doc's own length), and a per-row array filter to rebuild the text.
+    No suffix array, no global sort, text never rides a shuffle (only
+    the two 8-byte gram hashes and integer positions do).  The packed
+    key doc_id*1e6+pos assumes docs < 1e6 tokens (asserted in the
     docstring contract; a 100 TB corpus with longer docs widens the
     multiplier, BIGINT has 9.2e18 of headroom)."""
-    d = _tp(spark, sf_dir, "documents")
     k = _SPAN_K
     words = F.filter(
         F.split(F.lower(F.col("text")), r"\s+"), lambda w: w != ""
     )
-    n = F.size(words) - F.lit(k - 1)
+    # the word array is a COLUMN of a prior projection: a transform
+    # lambda that closes over the split expression re-evaluates it per
+    # element (no loop-invariant hoisting in interpreted HOFs); size(ws)
+    # below is its second use, which keeps CollapseProject from
+    # inlining it back
+    base = _tp(spark, sf_dir, "documents").select("doc_id", words.alias("ws"))
+    n = F.size("ws") - F.lit(k - 1)
     # xxhash64 over the slice array replaces md5(concat_ws): grouping
-    # key only (never output), 8-byte shuffle key instead of a 32-char
-    # string, no digest/string-build per position — see span_dup_stats.
-    grams = F.when(n > 0, F.transform(
-        F.sequence(F.lit(0), n - 1),
-        lambda i: F.xxhash64(F.slice(words, i + 1, k)),
-    )).otherwise(F.array().cast("array<bigint>"))
+    # key only (never output), two 8-byte shuffle keys instead of a
+    # 32-char string, no digest/string-build per position.  g2 is
+    # seeded by hashing a salt first (xxhash64 chains its arguments).
+    def gram_id(i: Column) -> Column:
+        ws = F.slice(F.col("ws"), i + 1, k)
+        return F.struct(
+            F.xxhash64(ws).alias("g1"), F.xxhash64(F.lit("g2"), ws).alias("g2")
+        )
+
+    grams = F.when(n > 0, F.transform(F.sequence(F.lit(0), n - 1), gram_id)).otherwise(
+        F.array().cast("array<struct<g1:bigint,g2:bigint>>")
+    )
     # Materialize the occurrence table: the dup aggregate AND the
     # removed-span join both consume it, and each DataFrame reference
     # re-executes the gram-hash explode (measured r6: 7.1 s vs 3.9 s
-    # warm with the checkpoint).  Affordable now that the key is an
-    # 8-byte xxhash64 instead of a 32-char md5 string (the r5
+    # warm with the checkpoint).  Affordable because the key is two
+    # 8-byte xxhash64 values instead of a 32-char md5 string (the r5
     # rejection of exactly this materialization predates that swap).
     occ = (
-        d.select("doc_id", F.posexplode(grams).alias("p0", "g"))
+        base.select("doc_id", F.posexplode(grams).alias("p0", "g"))
         .select(
-            "doc_id", "g",
+            "doc_id", "g.g1", "g.g2",
             (F.col("p0") + 1).cast("long").alias("pos"),
         )
     ).localCheckpoint(eager=True)
     packed = F.col("doc_id") * F.lit(1_000_000) + F.col("pos")
     dup = (
-        occ.groupBy("g")
+        occ.groupBy("g1", "g2")
         .agg(F.count(F.lit(1)).alias("nocc"), F.min(packed).alias("first_key"))
         .where(F.col("nocc") >= 2)
-        .select("g", "first_key")
+        .select("g1", "g2", "first_key")
     )
     removed = (
-        occ.join(dup, "g")
+        occ.join(dup, ["g1", "g2"])
         .where(packed != F.col("first_key"))
         .select(
             "doc_id",
@@ -1325,7 +1314,6 @@ def q_span_dedup_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     covered = removed.groupBy("doc_id").agg(F.collect_set("wi").alias("cov"))
-    base = d.select("doc_id", words.alias("ws"))
     cov = F.coalesce(F.col("cov"), F.array().cast("array<bigint>"))
     kept = F.filter(
         F.col("ws"),
@@ -1842,14 +1830,18 @@ def q_corpus_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the quality gate is pure Catalyst per-row, clustering
     shuffles only (hash, id) pairs, the sample is a per-row predicate —
     the whole verdict is one plan with two keyed joins."""
-    from hetman_spark.functions.dedup import connected_components, shingles
+    from hetman_spark.functions.dedup import (
+        bucket_pairs,
+        connected_components,
+        md5_minhash_bands,
+    )
     from hetman_spark.functions.sample import _BUCKETS, _hash_bucket  # noqa: F401
     from hetman_spark.functions.text import quality_filter
 
     d = _tp(spark, sf_dir, "documents")
     q = quality_filter(d).select("doc_id", F.col("reason").alias("q_reason"))
-    sh = d.select("doc_id", shingles(F.col("text"), 3).alias("sh"))
-    cc = connected_components(_band_pairs_from_shingles(sh))
+    bands = md5_minhash_bands(_doc_shingles(spark, sf_dir))
+    cc = connected_components(bucket_pairs(bands, ["band", "bucket"], None))
     non_keeper = (
         cc.where(F.col("v") != F.col("component"))
         .select(F.col("v").alias("doc_id"), F.lit(1).alias("is_dup"))
@@ -2221,21 +2213,15 @@ FROM orders
 
 
 # ---------------------------------------------------------------------------
-# SimHash duplicate groups — md5-based 60-bit variant so DuckDB computes
-# the IDENTICAL signature (the xxhash64 library simhash stays the
-# perf-path default; see functions/dedup.py simhash vs simhash_md5).
+# SimHash duplicate groups — the md5-based 60-bit functions/dedup.py
+# simhash, so DuckDB computes the IDENTICAL signature.
 # ---------------------------------------------------------------------------
 
 
 def q_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hetman_spark.functions.dedup import simhash_md5
+    from hetman_spark.functions.dedup import simhash_dedup
 
-    d = _tp(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id", simhash_md5(F.col("text")).alias("simhash"))
-        .groupBy("simhash")
-        .agg(F.min("doc_id").alias("keeper_id"), F.count(F.lit(1)).alias("n_copies"))
-    )
+    return simhash_dedup(_tp(spark, sf_dir, "documents"))
 
 
 SQL_SIMHASH_GROUPS = r"""
@@ -2293,7 +2279,7 @@ def q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-join (functions/dedup.py:simhash_near_pairs) over the
     engine-agnostic 60-bit md5 signature: 4 chunks of 15 bits,
     equi-join per chunk, exact bit_count(xor) post-filter."""
-    from hetman_spark.functions.dedup import simhash_md5, simhash_near_pairs
+    from hetman_spark.functions.dedup import simhash_near_pairs
 
     d = _tp(spark, sf_dir, "documents")
     # max_bucket_size=None: the DuckDB twin has no hot-bucket cap, so
@@ -2302,10 +2288,7 @@ def q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket exceeds the cap, and would silently diverge at a larger
     # SF (r3 ADVICE).  The capped form stays the production default in
     # functions/dedup.py.
-    return simhash_near_pairs(
-        d, id_col="doc_id", k=3, signature=simhash_md5(F.col("text")), bits=60,
-        max_bucket_size=None,
-    )
+    return simhash_near_pairs(d, k=3, max_bucket_size=None)
 
 
 SQL_SIMHASH_NEAR_PAIRS = f"""
@@ -2358,10 +2341,10 @@ def _sql_cell(planes: int, seed: int = 42, qv: str = "vq") -> str:
 
 def q_embedding_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH near-dup candidate pairs with the engine-agnostic
-    integer bucketing (the xxhash64 float library variant
-    functions/dedup.py:embedding_neardup_candidates stays the default;
-    this entry is its oracle-checkable twin — same bucketed equi-join
-    shape, never all-pairs)."""
+    integer bucketing (similarity.hyperplane_code_int cells) paired by
+    functions/dedup.py:bucket_pairs — a bucketed equi-join, never
+    all-pairs.  Uncapped, like the DuckDB twin."""
+    from hetman_spark.functions.dedup import bucket_pairs
     from hetman_spark.functions.similarity import hyperplane_code_int
 
     e = _t(spark, sf_dir, "embeddings")
@@ -2375,13 +2358,7 @@ def q_embedding_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("id"),
         hyperplane_code_int(F.col("embedding"), planes=12, dim=dim).alias("bucket"),
     ).localCheckpoint(eager=True)
-    a, b = bucketed.alias("l"), bucketed.alias("r")
-    return (
-        a.join(b, "bucket")
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
+    return bucket_pairs(bucketed, ["bucket"], None)
 
 
 SQL_EMBEDDING_LSH = f"""
@@ -2405,6 +2382,7 @@ def q_embedding_neardup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot^2 * 2^2k >= t^2 * n2a * n2b without ever leaving BIGINT.
     Scale shape: candidate-only joins (the pair list is tiny relative
     to the corpus), vectors shuffle only for paired ids."""
+    from hetman_spark.functions.dedup import bucket_pairs
     from hetman_spark.functions.similarity import (
         hyperplane_code_int,
         int_dot_sim,
@@ -2428,14 +2406,7 @@ def q_embedding_neardup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize_vec(F.col("embedding")).alias("vq"),
         hyperplane_code_int(F.col("embedding"), planes=12, dim=dim).alias("bucket"),
     ).localCheckpoint(eager=True)
-    ids = qv.select("id", "bucket")
-    a, b = ids.alias("l"), ids.alias("r")
-    id_pairs = (
-        a.join(b, "bucket")
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    id_pairs = bucket_pairs(qv.select("id", "bucket"), ["bucket"], None)
     vecs = qv.select("id", "vq")
     pairs = (
         id_pairs
@@ -2477,8 +2448,7 @@ JOIN qe y ON y.vec_id = p.id_b
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF probe, integer-exact: cells + quantized-dot ranking (see
-    similarity.ivf_topk_quantized; the float-cosine ivf_topk is the
-    full-precision library path)."""
+    similarity.ivf_topk_quantized)."""
     from hetman_spark.functions.similarity import ivf_topk_quantized
 
     e = _t(spark, sf_dir, "embeddings")

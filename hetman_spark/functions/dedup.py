@@ -1,18 +1,28 @@
 """Deduplication operators for web-scale corpora.
 
-Five tiers, all expressed as DataFrame plans that survive 100 TB:
+Every tier is a DataFrame plan that survives 100 TB:
 
 - exact_dedup: hash-groupBy on a content hash (one shuffle of
   (hash, id) pairs only — never shuffles the text).
-- minhash_lsh: shingle -> K minhashes -> B bands -> band-bucket join.
-  Candidate pairs come from equal band signatures (a self-join on the
-  tiny (band, bucket) key), so the cross product never materializes.
-- simhash: 64-bit similarity hash via per-token hash bit-voting;
-  near-dups = identical simhash or Hamming-adjacent buckets.
+- incremental_dedup_bloom: batch-vs-corpus anti-join with a Bloom
+  pre-pass that prunes the corpus map-side.
+- MinHash LSH: shingle -> minhashes -> band table -> bucket_pairs.
+  Two band tables: minhash_lsh_candidates (xxhash64 members, the
+  pipeline's --neardup path) and md5_minhash_bands (md5 members, which
+  any SQL engine recomputes).
+- simhash: 60-bit md5 similarity hash via per-word bit-voting;
+  simhash_dedup groups identical signatures, simhash_near_pairs finds
+  Hamming distance <= k through bit-chunk bands and bucket_pairs.
 - ngram_jaccard: exact Jaccard over word n-grams for candidate pairs
   (the verification stage after LSH).
-- embedding_neardup: cosine >= threshold over an embedding column,
-  LSH-bucketed by random hyperplane signs.
+- connected_components / dedup_clusters: transitive clustering of the
+  candidate-pair graph, one keeper per cluster.
+- line_dedup: CCNet line-level dedup.
+
+bucket_pairs is the one candidate-pair self-join: every band or
+bucket table (MinHash bands, SimHash chunks, hyperplane cells of
+similarity.hyperplane_code_int) pairs up through it, so the cross
+product never materializes and the hot-bucket cap lives in one place.
 
 Hashes are xxhash64/md5 (Spark built-ins, deterministic across runs
 and cluster sizes).
@@ -197,17 +207,10 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
 
-    rows -> signature -> explode into `bands` (band_id, band_hash)
-    keys -> self-join on the band key.  The shuffle carries only
-    (band_hash, id); texts never move.  Pairs are deduped (a<b) and
-    distinct across bands.
-
-    max_bucket_size: buckets larger than this are DROPPED before the
-    self-join (left_semi against the under-cap bucket list).  A bucket
-    of k members emits k(k-1)/2 pairs; one degenerate hot bucket
-    (boilerplate, empty docs, tiny shared vocab) turns the join
-    quadratic at corpus scale, and a bucket that 1000+ documents share
-    carries no near-dup signal anyway.  None disables the cap.
+    rows -> xxhash64 signature -> explode into `bands` (band, bucket)
+    keys -> bucket_pairs on the band key.  The shuffle carries only
+    (band, bucket, id); texts never move.  max_bucket_size is
+    bucket_pairs' hot-bucket cap.
     """
     rows_per_band = num_hashes // bands
     sig = minhash_signature(F.col(text_col), num_hashes, shingle_n)
@@ -251,25 +254,93 @@ def minhash_lsh_candidates(
     # signature table); localCheckpoint is its in-session analog.
     # Tiny: bands x n rows of three scalars, never the text.
     banded = banded.localCheckpoint(eager=True)
+    return bucket_pairs(banded, ["band", "bucket"], max_bucket_size)
 
+
+def bucket_pairs(
+    banded: DataFrame, keys: list[str], max_bucket_size: int | None
+) -> DataFrame:
+    """Candidate pairs from a band table: the one LSH self-join that
+    every candidate-pair site (MinHash, SimHash, hyperplane buckets)
+    runs through.
+
+    `banded` holds (id, *keys, ...) rows, one per (doc, band).  Docs
+    sharing a `keys` value pair up via an equi-join on `keys` with
+    l.id < r.id, so the cross product never materializes and only the
+    band table's own columns shuffle.  Returns distinct (id_a, id_b)
+    rows; every other column of `banded` comes back as <col>_a and
+    <col>_b (SimHash filters on them).  A pair colliding in several
+    bands appears once.
+
+    max_bucket_size: buckets larger than this are DROPPED before the
+    self-join (left_semi against the under-cap bucket list).  A bucket
+    of k members emits k(k-1)/2 pairs; one degenerate hot bucket
+    (boilerplate, empty docs, tiny shared vocab) turns the join
+    quadratic at corpus scale, and a bucket that 1000+ documents share
+    carries no near-dup signal anyway.  None disables the cap.
+
+    `banded` is referenced by the cap aggregate and both join sides,
+    so callers materialize it once where they build it."""
     if max_bucket_size is not None:
-        ok_buckets = (
-            banded.groupBy("band", "bucket")
+        ok = (
+            banded.groupBy(*keys)
             .agg(F.count(F.lit(1)).alias("n"))
             .where(F.col("n") <= max_bucket_size)
-            .select("band", "bucket")
+            .select(*keys)
         )
-        banded = banded.join(ok_buckets, ["band", "bucket"], "left_semi")
-
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(right, ["band", "bucket"])
+        banded = banded.join(ok, keys, "left_semi")
+    rest = [c for c in banded.columns if c != "id" and c not in keys]
+    left, right = banded.alias("l"), banded.alias("r")
+    return (
+        left.join(right, keys)
         .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+        .select(
+            F.col("l.id").alias("id_a"),
+            F.col("r.id").alias("id_b"),
+            *[F.col(f"l.{c}").alias(f"{c}_a") for c in rest],
+            *[F.col(f"r.{c}").alias(f"{c}_b") for c in rest],
+        )
         .distinct()
     )
-    return pairs
+
+
+MD5_MINHASH_SALTS = ["s0", "s1", "s2", "s3"]
+
+
+def md5_minhash_bands(sh: DataFrame) -> DataFrame:
+    """(id, sh: array<string>) -> materialized (id, band, bucket) rows:
+    the engine-agnostic MinHash band table (md5 members, so DuckDB
+    recomputes it bit-for-bit), 2 bands of 2 members.
+
+    min(md5) per salt is array_min over a per-row transform — pure
+    expressions, NO explode+groupBy shuffle (lexicographic min over the
+    same md5 set as a SQL unnest+min).  This IS the persistable LSH
+    signature table of the incremental path; it is checkpointed here
+    because bucket_pairs references it up to three times and a
+    DataFrame referenced twice re-runs the shingle+md5 pass twice (no
+    cross-reference CSE).  Tiny: 2 rows/doc of three scalars."""
+
+    def msig(salt: str):
+        # closure, not a default-arg lambda (2-param transform lambdas
+        # are (element, index))
+        return F.array_min(
+            F.transform(F.col("sh"), lambda w: F.md5(F.concat(w, F.lit(salt))))
+        )
+
+    sigs = sh.select(
+        "id", *[msig(s).alias(f"m{i}") for i, s in enumerate(MD5_MINHASH_SALTS)]
+    )
+    return sigs.select(
+        "id",
+        F.explode(
+            F.array(
+                F.struct(F.lit(0).alias("band"), F.md5(F.concat("m0", "m1")).alias("bucket")),
+                F.struct(F.lit(1).alias("band"), F.md5(F.concat("m2", "m3")).alias("bucket")),
+            )
+        ).alias("bk"),
+    ).select(
+        "id", F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket")
+    ).localCheckpoint(eager=True)
 
 
 def ngram_jaccard(df_pairs: DataFrame, docs: DataFrame,
@@ -292,57 +363,17 @@ def ngram_jaccard(df_pairs: DataFrame, docs: DataFrame,
     )
 
 
-def simhash(text: Column, shingle_n: int = 2) -> Column:
-    """64-bit SimHash: per-shingle xxhash64, each of the 64 bits votes
-    +1/-1; the sign vector is the hash.  Expressed as 64 aggregate
-    sums over the shingle array (JVM lambda, no shuffle)."""
-    sh = shingles(text, shingle_n)
-
-    # ONE pass over the shingle hashes with an array<long> accumulator
-    # of 63 bit-vote counters.  (The naive form — 64 independent
-    # aggregate() expressions — compiles a massive codegen unit and
-    # ran ~100x slower: measured 228s vs ~2s at sf0.1.)  Per shingle
-    # the bits come from bin(xxhash64) as a char array — pyspark's
-    # shiftright/substring demand literal shift amounts, strings
-    # don't.  63 bits, not 64: packing the sign bit would overflow
-    # BIGINT under ANSI mode.
-    bits_of = lambda s: F.split(F.lpad(F.bin(F.xxhash64(s)), 64, "0"), "")  # noqa: E731
-    votes = F.aggregate(
-        sh,
-        F.array_repeat(F.lit(0).cast("long"), 63),
-        lambda acc, s: F.zip_with(
-            acc,
-            F.slice(
-                F.transform(
-                    bits_of(s),
-                    lambda c: F.when(c == "1", F.lit(1).cast("long")).otherwise(
-                        F.lit(-1).cast("long")
-                    ),
-                ),
-                2,  # skip the sign bit (position 1 of the 64-char string)
-                63,
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-    # pack the 63 vote signs MSB-first: acc*2 + bit, max 2^63-1
-    return F.aggregate(
-        votes,
-        F.lit(0).cast("long"),
-        lambda acc, v: acc * 2 + F.when(v > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")),
-    )
-
-
-def simhash_md5(text: Column) -> Column:
-    """Engine-agnostic 60-bit SimHash over distinct lowercase words.
-
-    Same bit-voting construction as :func:`simhash` but the per-token
-    hash is md5 (first 15 hex nibbles = 60 bits) instead of xxhash64,
-    so any engine with md5 — DuckDB, Trino, Postgres — computes the
-    IDENTICAL signature; this is the oracle-checkable twin used by the
-    driver gate.  hex -> bit chars via conv(,16,2); votes accumulate in
-    ONE array aggregate (the 64-separate-aggregates form is a codegen
-    bomb, see simhash())."""
+def simhash(text: Column) -> Column:
+    """60-bit SimHash over distinct lowercase words: each word's md5
+    (first 15 hex nibbles = 60 bits) votes +1/-1 per bit; the sign
+    vector, packed MSB-first, is the hash.  md5 means any engine with
+    md5 — DuckDB, Trino, Postgres — computes the IDENTICAL signature.
+    hex -> bit chars via conv(,16,2) (pyspark's shiftright/substring
+    demand literal amounts, strings don't).  Votes accumulate in ONE
+    array<long> aggregate: the naive form — 60 independent aggregate()
+    expressions — compiles a massive codegen unit and ran ~100x slower
+    (228 s vs ~2 s at sf0.1).  60 bits, not 64: packing the sign bit
+    would overflow BIGINT under ANSI mode."""
     words = F.array_distinct(F.split(F.lower(text), r"\s+"))
     bits_of = lambda w: F.slice(  # noqa: E731
         F.split(F.lpad(F.conv(F.substring(F.md5(w), 1, 15), 16, 2), 60, "0"), ""), 1, 60
@@ -384,31 +415,26 @@ def simhash_near_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 3,
-    signature: Column | None = None,
-    bits: int = 63,
     max_bucket_size: int | None = 1000,
 ) -> DataFrame:
-    """Near-duplicate pairs at Hamming distance <= k over SimHash
-    signatures — the banded bucket-join (Manku/Jain/Sarma's web-dedup
-    construction, re-expressed as DataFrame equi-joins).
+    """Near-duplicate pairs at Hamming distance <= k over the 60-bit
+    :func:`simhash` signatures — the banded bucket-join
+    (Manku/Jain/Sarma's web-dedup construction, re-expressed as
+    DataFrame equi-joins).
 
-    Pigeonhole: split the `bits` signature bits into k+1 contiguous
+    Pigeonhole: split the 60 signature bits into k+1 contiguous
     chunks; two signatures within Hamming distance k must agree
     EXACTLY on at least one chunk (k flipped bits can dirty at most k
-    chunks).  So: explode each doc into k+1 (chunk_id, chunk_value)
-    rows, equi-join per chunk — the shuffle carries only
-    (chunk_value, id, signature) — then post-filter the exact
-    distance with bit_count(a XOR b) <= k.  Same scale shape as
-    minhash_lsh_candidates: a hash join on a dense key, never a cross
-    product; hot chunks (e.g. all-zero signatures from empty docs)
-    are dropped by the max_bucket_size cap.
-
-    `signature`: precomputed signature Column (defaults to the
-    xxhash64 :func:`simhash` over text_col, 63 bits; pass
-    simhash_md5(...) with bits=60 for the engine-agnostic twin).
+    chunks).  So: explode each doc into k+1 (chunk, cv) rows,
+    bucket_pairs on (chunk, cv) — the shuffle carries only (chunk, cv,
+    id, signature) — then filter the exact distance with
+    bit_count(sim_a XOR sim_b) <= k.  The filter references only
+    grouping keys of bucket_pairs' distinct, so Catalyst pushes it
+    below the distinct into the join.  Hot chunks (e.g. all-zero
+    signatures from empty docs) are dropped by the max_bucket_size
+    cap.
     """
-    sig = signature if signature is not None else simhash(F.col(text_col))
-    chunks = k + 1
+    bits, chunks = 60, k + 1
     w = bits // chunks
 
     def chunk_val(c: int) -> Column:
@@ -417,7 +443,9 @@ def simhash_near_pairs(
         # literal shift amounts — pyspark shiftright demands them
         return F.shiftright(F.col("sim"), lo).bitwiseAND(F.lit((1 << width) - 1))
 
-    banded = df.select(F.col(id_col).alias("id"), sig.alias("sim")).select(
+    banded = df.select(
+        F.col(id_col).alias("id"), simhash(F.col(text_col)).alias("sim")
+    ).select(
         "id",
         "sim",
         F.explode(
@@ -437,26 +465,11 @@ def simhash_near_pairs(
     # times.  Tiny: (k+1) rows/doc of four scalars, never the text.
     banded = banded.localCheckpoint(eager=True)
 
-    if max_bucket_size is not None:
-        ok = (
-            banded.groupBy("chunk", "cv")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") <= max_bucket_size)
-            .select("chunk", "cv")
-        )
-        banded = banded.join(ok, ["chunk", "cv"], "left_semi")
-
-    left, right = banded.alias("l"), banded.alias("r")
-    hamming = F.bit_count(F.col("l.sim").bitwiseXOR(F.col("r.sim"))).cast("long")
+    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("long")
     return (
-        left.join(right, ["chunk", "cv"])
-        .where((F.col("l.id") < F.col("r.id")) & (hamming <= k))
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            hamming.alias("hamming"),
-        )
-        .distinct()
+        bucket_pairs(banded, ["chunk", "cv"], max_bucket_size)
+        .where(hamming <= k)
+        .select("id_a", "id_b", hamming.alias("hamming"))
     )
 
 
@@ -465,7 +478,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iters: int = 25,
-    check_every: int = 1,
     stats: dict | None = None,
 ) -> DataFrame:
     """(node, component) for every node that appears in `pairs`;
@@ -492,8 +504,11 @@ def connected_components(
 
     Per-round driver work is one fingerprint aggregate: labels only
     ever DECREASE, so sum(label) is monotone and the fixpoint is
-    'sum unchanged' — no expensive old-vs-new anti-join.  Each round
-    localCheckpoints the label table: iterative self-joins otherwise
+    'sum unchanged' — no expensive old-vs-new anti-join.  It is checked
+    every round: checking every 2nd round detected convergence 2 rounds
+    late at 200k docs / 353k pairs, and the extra rounds cost more than
+    the saved ~0.1 s collects (10.2 s vs 12.1 s, BENCH.md dedup-family
+    record).  Each round localCheckpoints the label table: iterative self-joins otherwise
     double the lineage/plan depth per round, and round 12 would
     re-plan an exponentially deep tree.  (localCheckpoint trades
     executor-loss tolerance for speed; a long job on a preemptible
@@ -504,21 +519,8 @@ def connected_components(
     commutative); raises if max_iters rounds don't converge (2^25
     chain depth) rather than returning a half-merged clustering.
 
-    check_every: fingerprint-collect cadence.  Labels are monotone
-    non-increasing, so a fingerprint unchanged across k rounds proves
-    NOTHING moved in any of them — skipping checks never falsely
-    converges.  MEASURED (r4 VERDICT #6 asked for cadence 2; BENCH.md
-    'dedup-family record'): at 200k docs / 353k pairs, check_every=2
-    detects convergence 2 rounds LATE (rounds 8 -> 10) and the extra
-    rounds (~1 s each: two keyed joins + localCheckpoint) cost 5-10x
-    the saved fingerprint collects (~0.1 s narrow agg each): wall
-    10.2 s -> 12.1 s.  The ratio only worsens with data (rounds
-    shuffle, fingerprints partial-aggregate), so the default stays 1;
-    the knob remains for deployments where driver RTT genuinely
-    dominates a round (very small graphs on a remote cluster manager).
-
-    stats: pass a dict to receive {"rounds": n, "checks": m} back
-    (bench instrumentation; BENCH.md dedup-family record).
+    stats: pass a dict to receive {"rounds": n} back (bench
+    instrumentation; BENCH.md dedup-family record).
     """
     a, b = F.col(src).alias("v"), F.col(dst).alias("u")
     # checkpoint the edge list: it joins into EVERY round, and without
@@ -569,13 +571,10 @@ def connected_components(
         labels = jumped.localCheckpoint(eager=True)
         if stats is not None:
             stats["rounds"] = it + 1
-        if (it + 1) % check_every == 0 or it == max_iters - 1:
-            if stats is not None:
-                stats["checks"] = stats.get("checks", 0) + 1
-            new_fp = fp(labels)
-            if new_fp == fingerprint:
-                return labels.select("v", F.col("label").alias("component"))
-            fingerprint = new_fp
+        new_fp = fp(labels)
+        if new_fp == fingerprint:
+            return labels.select("v", F.col("label").alias("component"))
+        fingerprint = new_fp
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} rounds "
         "(pathological chain > 2^25 deep?)"
@@ -599,59 +598,6 @@ def dedup_clusters(
             F.sort_array(F.collect_list("v")).alias("member_ids"),
             (F.count(F.lit(1)) - 1).alias("n_removable"),
         )
-    )
-
-
-def embedding_neardup_candidates(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    planes: int = 12,
-    seed: int = 42,
-    max_bucket_size: int | None = 10_000,
-) -> DataFrame:
-    """Near-duplicate candidates over an embedding column via
-    random-hyperplane LSH: sign pattern of `planes` fixed pseudo-random
-    hyperplanes forms the bucket; same bucket => candidate pair.
-
-    Hyperplane components are derived from xxhash64(seed, plane, dim) —
-    deterministic, no driver-side randomness, identical on any cluster.
-    """
-    dim_idx = F.sequence(F.lit(0), F.size(F.col(vec_col)) - 1)
-
-    def plane_sign(p: int) -> Column:
-        comps = F.transform(
-            dim_idx,
-            lambda d: (
-                F.pmod(F.xxhash64(F.lit(seed), F.lit(p), d), F.lit(2001)).cast("double") - 1000.0
-            )
-            / 1000.0,
-        )
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col).cast("array<double>"), comps, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0"))
-
-    bucket = F.concat(*[plane_sign(p) for p in range(planes)])
-    bucketed = df.select(F.col(id_col).alias("id"), bucket.alias("bucket"))
-    if max_bucket_size is not None:
-        # hot-bucket cap: a degenerate bucket (e.g. zero vectors, or a
-        # hyperplane set that fails to split a dense cluster) would
-        # emit k^2/2 pairs — drop buckets too large to be informative
-        ok = (
-            bucketed.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") <= max_bucket_size)
-            .select("bucket")
-        )
-        bucketed = bucketed.join(ok, "bucket", "left_semi")
-    left, right = bucketed.alias("l"), bucketed.alias("r")
-    return (
-        left.join(right, "bucket")
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
     )
 
 

@@ -1,17 +1,21 @@
 """Similarity search over an embedding column (array<float>).
 
 - cosine_topk: brute-force exact top-k (the baseline; one broadcast
-  of the query batch, no shuffle of the corpus).
-- ivf_topk: IVF-style scale path — corpus is pre-assigned to
-  centroids (deterministic hyperplane code or provided centroids);
-  queries probe only the nearest cells, so the scan is a partition-
-  pruned fraction of the corpus.
-- lsh_topk: hyperplane-LSH bucketed approximate top-k (reuses
-  dedup.embedding_neardup_candidates' bucketing).
+  of the query batch, no shuffle of the corpus); cosine_topk_pandas
+  is its vectorized NumPy variant for wide batches where BLAS beats
+  codegen.
+- ivf_topk_quantized: IVF-style scale path — corpus assigned to
+  hyperplane_code_int cells (md5-derived integer planes over the
+  quantized vector); queries probe only their own cell, ranked by an
+  exact integer dot product.  ivf_topk_multiprobe adds Hamming-
+  adjacent probes, ivf_topk_trained probes k-means cells.
+- pq_topk / ivfpq_topk / ivfpq_topk_residual / sq8_topk: top-k over
+  compressed vector codes.
+- semdedup (k-means semantic dedup) and knn_label_vote.
 
-Dot products are pure JVM lambdas (zip_with + aggregate); a
-vectorized pandas/NumPy variant is provided for wide batches where
-BLAS beats codegen.
+hyperplane_code_int also buckets the embedding near-dup entry
+queries (dedup.bucket_pairs).  Dot products are pure JVM lambdas
+(zip_with + aggregate).
 """
 
 from __future__ import annotations
@@ -70,75 +74,6 @@ def cosine_topk(
     )
 
 
-def hyperplane_code(vec: Column, planes: int = 8, seed: int = 42) -> Column:
-    """Deterministic IVF/LSH cell id: sign pattern of pseudo-random
-    hyperplanes (components from xxhash64 — no driver randomness)."""
-    dim_idx = F.sequence(F.lit(0), F.size(vec) - 1)
-
-    def components(p: int):
-        # closure factory — NOT a default arg: pyspark's transform
-        # treats a 2-param lambda as (element, index)
-        return F.transform(
-            dim_idx,
-            lambda d: (
-                F.pmod(F.xxhash64(F.lit(seed), F.lit(p), d), F.lit(2001)).cast("double") - 1000.0
-            )
-            / 1000.0,
-        )
-
-    code = F.lit(0).cast("long")
-    for p in range(planes):
-        dot_p = F.aggregate(
-            F.zip_with(vec.cast("array<double>"), components(p), lambda a, b: a * b),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-        code = code.bitwiseOR(
-            F.shiftleft(F.when(dot_p >= 0, F.lit(1).cast("long")).otherwise(F.lit(0)), p)
-        )
-    return code
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    planes: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Approximate top-k: corpus bucketed by hyperplane cell
-    (pre-computable and persistable as a partition column at scale —
-    the IVF index); each query probes only its own cell.
-
-    Recall/latency trade via `planes` (2^planes cells).  At 100 TB the
-    cell column is written once (partitionBy(cell)), making the probe
-    a partition-pruned scan.
-    """
-    from pyspark.sql import Window
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-        hyperplane_code(F.col(vec_col), planes).alias("cell"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-        hyperplane_code(F.col(vec_col), planes).alias("cell"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cosine(F.col("cv"), F.col("qv")).alias("sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
-
-
 def quantize_vec(vec: Column, scale: int = 1000) -> Column:
     """array<float> -> array<long> via floor(x*scale): the int8/int16
     quantization trick of production ANN indexes, used here to make
@@ -153,8 +88,7 @@ def quantize_vec(vec: Column, scale: int = 1000) -> Column:
 
 def _md5_component(salt: str, d: Column) -> Column:
     """Deterministic pseudo-random integer in [-1000, 1000] derived
-    from md5 — computable identically in any engine with md5 (the
-    xxhash64 variant in hyperplane_code is Spark-only)."""
+    from md5 — computable identically in any engine with md5."""
     h6 = F.substring(F.md5(F.concat(F.lit(salt), d.cast("string"))), 1, 6)
     return F.pmod(F.conv(h6, 16, 10).cast("long"), F.lit(2001)) - F.lit(1000)
 
@@ -296,12 +230,11 @@ def ivf_topk_quantized(
     dim: int | None = None,
 ) -> DataFrame:
     """IVF probe with integer-exact arithmetic end-to-end: cells from
-    hyperplane_code_int, ranking by quantized dot product.  Same plan
-    shape as ivf_topk (broadcast queries, equi-join on cell, window
-    top-k) but every number is a BIGINT, so the result is
-    deterministic across engines AND cluster sizes — this is the
-    oracle-checkable twin; ivf_topk (float cosine) stays the
-    full-precision path."""
+    hyperplane_code_int, ranking by quantized dot product.  Plan:
+    broadcast queries, equi-join on cell, window top-k.  Every number
+    is a BIGINT, so the result is deterministic across engines AND
+    cluster sizes (a float dot product near a plane's sign boundary
+    could flip a cell between engines)."""
     from pyspark.sql import Window
 
     c = corpus.select(

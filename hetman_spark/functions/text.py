@@ -92,8 +92,8 @@ def lang_id(text: Column) -> Column:
 
 def fingerprint(text: Column, prefix_len: int = 256) -> Column:
     """Deterministic document fingerprint: 64-bit xxhash of the
-    normalized text (whitespace collapsed, lowered).  The rolling-hash
-    shingle variant lives in dedup.simhash/minhash."""
+    normalized text (whitespace collapsed, lowered).  Near-duplicate
+    signatures live in dedup.simhash/minhash_signature."""
     normalized = F.lower(F.regexp_replace(text, r"\s+", " "))
     return F.xxhash64(normalized)
 

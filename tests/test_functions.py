@@ -20,7 +20,7 @@ from hetman_spark.functions.multimodal import (
     synth_media,
     with_media_metadata,
 )
-from hetman_spark.functions.similarity import cosine_topk, cosine_topk_pandas, ivf_topk
+from hetman_spark.functions.similarity import cosine_topk, cosine_topk_pandas, ivf_topk_quantized
 from hetman_spark.functions.text import text_stats
 
 
@@ -120,10 +120,11 @@ def test_cosine_topk_pandas_matches_jvm(spark, vectors):
 
 
 def test_ivf_topk_probes_own_cell(spark, vectors):
-    out = ivf_topk(vectors, vectors.filter("vec_id = 0"), k=5, planes=2)
+    out = ivf_topk_quantized(vectors, vectors.filter("vec_id = 0"), k=5, planes=2)
     rows = out.collect()
-    # query 0's strongest neighbor (vec 1, identical direction) shares
-    # every hyperplane sign, so IVF must find it
+    # query 0's strongest neighbor (vec 1, identical direction, twice
+    # the norm) shares every hyperplane sign and has the largest dot
+    # product, so IVF must find it first
     assert rows[0]["neighbor_id"] == 1
 
 
