@@ -318,6 +318,8 @@ FROM documents
 
 
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from hetman_spark.functions.similarity import cosine
+
     # min(vec_id) stays IN the plan (broadcast 1-row join) — the
     # driver-side collect this entry used to do was r4 VERDICT's
     # residual nit #2; one job end-to-end now
@@ -331,13 +333,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.join(F.broadcast(mid), e["vec_id"] == mid["min_id"], "left_anti")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("ce"))
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("ce"), F.col("qe"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x))  # noqa: E731
-    sim = dot / (norm(F.col("ce")) * norm(F.col("qe")))
+    sim = cosine(F.col("ce"), F.col("qe"))
     ranked = (
         cand.crossJoin(F.broadcast(q))
         .select(F.col("vec_id").alias("neighbor_id"), sim.alias("sim"))
@@ -2447,8 +2443,8 @@ JOIN qe y ON y.vec_id = p.id_b
 
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF probe, integer-exact: cells + quantized-dot ranking (see
-    similarity.ivf_topk_quantized)."""
+    """IVF probe, integer-exact: each query probes its own cell,
+    quantized-dot ranking (see similarity.ivf_topk_quantized)."""
     from hetman_spark.functions.similarity import ivf_topk_quantized
 
     e = _t(spark, sf_dir, "embeddings")
@@ -2485,14 +2481,15 @@ SELECT query_id, neighbor_id, dot_q, rank FROM (
 
 def q_ivf_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe IVF: each query probes its own cell + the 2
-    lowest-|dot| plane flips (similarity.ivf_topk_multiprobe) —
-    strictly higher recall than q_ivf_topk at the same index layout."""
-    from hetman_spark.functions.similarity import ivf_topk_multiprobe
+    lowest-|dot| plane flips (similarity.ivf_topk_quantized with
+    nprobe=3) — strictly higher recall than q_ivf_topk at the same
+    index layout."""
+    from hetman_spark.functions.similarity import ivf_topk_quantized
 
     e = _t(spark, sf_dir, "embeddings")
     dim = e.select(F.size("embedding")).first()[0]
     queries = e.orderBy("vec_id").limit(3)
-    return ivf_topk_multiprobe(
+    return ivf_topk_quantized(
         _tp(spark, sf_dir, "embeddings"), queries, k=5, planes=8, nprobe=3, dim=dim
     ).select(
         "query_id", "neighbor_id", "dot_q", "rank"
@@ -2566,27 +2563,42 @@ SELECT query_id, neighbor_id, dot_q, rank FROM (
 
 _KM_K, _KM_ITERS, _KM_DIM = 8, 3, 64
 
-# Memoized k-means centroids per (sf_dir, k, iters, dim): training is
+# Memoized trained ANN constants per (sf_dir, kind): training is
 # deterministic integer arithmetic (same trajectory in any session or
 # engine — that's what the unrolled-CTE oracles prove), so the trained
 # constants are a pure function of the inputs and safe to reuse across
-# the kmeans_clusters / ivf_topk_trained / semdedup entries instead of
-# re-running 3 Lloyd iterations (~4 s) in each.  Plain Python lists —
-# nothing session-scoped is cached.
-_KM_CENT_CACHE: dict[tuple, list[list[int]]] = {}
+# entries instead of re-running the Lloyd iterations (~4 s) in each.
+# Plain Python lists — nothing session-scoped is cached.
+_ANN_CONSTANTS: dict[tuple[str, str], list] = {}
 
 
-def _trained_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]]:
-    key = (sf_dir, _KM_K, _KM_ITERS, _KM_DIM)
-    if key not in _KM_CENT_CACHE:
-        from hetman_spark.functions.similarity import train_kmeans_centroids
+def _ann_constants(spark: SparkSession, sf_dir: str, kind: str) -> list:
+    """kind "cells": the k-means centroids (kmeans_clusters,
+    ivf_topk_trained, semdedup and the coarse quantizer of both
+    IVFADC entries); "pq": PQ codebooks on the raw vectors (pq_topk,
+    ivfpq_topk); "pq_residual": PQ codebooks on the residuals from the
+    "cells" centroids (ivfpq_residual_topk)."""
+    key = (sf_dir, kind)
+    if key not in _ANN_CONSTANTS:
+        from hetman_spark.functions.similarity import (
+            residual_projection,
+            train_kmeans,
+        )
 
         e = _tp(spark, sf_dir, "embeddings")
-        _, cents = train_kmeans_centroids(
-            e, _KM_K, _KM_ITERS, dim=_KM_DIM
-        )
-        _KM_CENT_CACHE[key] = cents
-    return _KM_CENT_CACHE[key]
+        if kind == "cells":
+            out = train_kmeans(e, _KM_K, _KM_ITERS)[0]
+        elif kind == "pq":
+            out = train_kmeans(e, _PQ_KS, _PQ_ITERS, m_sub=_PQ_M)
+        elif kind == "pq_residual":
+            resid = residual_projection(e, _ann_constants(spark, sf_dir, "cells"))
+            out = train_kmeans(
+                resid, _PQ_KS, _PQ_ITERS, m_sub=_PQ_M, vec_col="rv", quantized=True
+            )
+        else:
+            raise ValueError(f"unknown ANN constant kind {kind!r}")
+        _ANN_CONSTANTS[key] = out
+    return _ANN_CONSTANTS[key]
 
 
 def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2597,10 +2609,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hetman_spark.functions.similarity import kmeans_quantized
 
     e = _tp(spark, sf_dir, "embeddings")
-    a = kmeans_quantized(
-        e, k=_KM_K, iters=_KM_ITERS, dim=_KM_DIM,
-        centroids=_trained_centroids(spark, sf_dir),
-    )
+    a = kmeans_quantized(e, _ann_constants(spark, sf_dir, "cells"))
     return a.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.sum("dist_q").alias("inertia_q"),
@@ -2619,7 +2628,7 @@ def _sql_kmeans_dist(dim: int, qa: str = "q", ca: str = "c") -> str:
 
 def _sql_kmeans_parts(k: int, iters: int, dim: int) -> list[str]:
     """The shared centroid-training CTE chain (DuckDB twin of
-    similarity.train_kmeans_centroids, iterations UNROLLED): c0 = init
+    similarity.train_kmeans, iterations UNROLLED): c0 = init
     centroids, then per round i an assignment CTE a{i} (argmin over a
     cross join with the k-row centroid table, ties by centroid index)
     and an update CTE c{i+1} (floor-mean per dim; empty clusters keep
@@ -2692,9 +2701,8 @@ def q_ivf_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = e.orderBy("vec_id").limit(_IVT_NQ)
     return ivf_topk_trained(
         _tp(spark, sf_dir, "embeddings"), queries,
-        k=_IVT_TOPK, n_cells=_KM_K, iters=_KM_ITERS,
-        nprobe=_IVT_NPROBE, dim=_KM_DIM,
-        centroids=_trained_centroids(spark, sf_dir),
+        _ann_constants(spark, sf_dir, "cells"),
+        k=_IVT_TOPK, nprobe=_IVT_NPROBE,
     ).select("query_id", "neighbor_id", "dot_q", "rank")
 
 
@@ -2759,9 +2767,8 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _tp(spark, sf_dir, "embeddings")
     return semdedup(
-        e, k=_KM_K, iters=_KM_ITERS, tau_num=_SD_TAU_NUM,
-        tau_den=_SD_TAU_DEN, dim=_KM_DIM,
-        centroids=_trained_centroids(spark, sf_dir),
+        e, _ann_constants(spark, sf_dir, "cells"),
+        tau_num=_SD_TAU_NUM, tau_den=_SD_TAU_DEN,
     )
 
 
@@ -3420,9 +3427,7 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _tp(spark, sf_dir, "embeddings")
     queries = e.orderBy("vec_id").limit(_PQ_NQ)
     return pq_topk(
-        e, queries, k=_PQ_TOPK, m_sub=_PQ_M, ks=_PQ_KS,
-        iters=_PQ_ITERS, dim=_KM_DIM,
-        codebooks=_trained_codebooks(spark, sf_dir),
+        e, queries, _ann_constants(spark, sf_dir, "pq"), k=_PQ_TOPK
     )
 
 
@@ -3517,24 +3522,6 @@ WHERE rank <= {topk}
 SQL_PQ_TOPK = _sql_pq_topk(_PQ_M, _PQ_KS, _PQ_ITERS, _KM_DIM, _PQ_NQ, _PQ_TOPK)
 
 
-# Memoized PQ codebooks, same argument as _KM_CENT_CACHE: deterministic
-# integer training => a pure function of (sf_dir, m, ks, iters, dim).
-_PQ_CB_CACHE: dict[tuple, list[list[list[int]]]] = {}
-
-
-def _trained_codebooks(spark: SparkSession, sf_dir: str):
-    key = (sf_dir, _PQ_M, _PQ_KS, _PQ_ITERS, _KM_DIM)
-    if key not in _PQ_CB_CACHE:
-        from hetman_spark.functions.similarity import pq_train_codebooks
-
-        e = _tp(spark, sf_dir, "embeddings")
-        _, cb = pq_train_codebooks(
-            e, m_sub=_PQ_M, ks=_PQ_KS, iters=_PQ_ITERS, dim=_KM_DIM
-        )
-        _PQ_CB_CACHE[key] = cb
-    return _PQ_CB_CACHE[key]
-
-
 def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed IVF+PQ index (similarity.ivfpq_topk — Jegou et
     al.'s IVFADC structure, no-residual variant): trained coarse cells
@@ -3548,11 +3535,10 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _tp(spark, sf_dir, "embeddings")
     queries = e.orderBy("vec_id").limit(_IVT_NQ)
     return ivfpq_topk(
-        e, queries, k=_IVT_TOPK, n_cells=_KM_K, km_iters=_KM_ITERS,
-        nprobe=_IVT_NPROBE, m_sub=_PQ_M, ks=_PQ_KS, pq_iters=_PQ_ITERS,
-        dim=_KM_DIM,
-        centroids=_trained_centroids(spark, sf_dir),
-        codebooks=_trained_codebooks(spark, sf_dir),
+        e, queries,
+        _ann_constants(spark, sf_dir, "cells"),
+        _ann_constants(spark, sf_dir, "pq"),
+        k=_IVT_TOPK, nprobe=_IVT_NPROBE,
     )
 
 
@@ -3615,31 +3601,6 @@ SQL_IVFPQ_TOPK = _sql_ivfpq(
 )
 
 
-# Memoized RESIDUAL-trained PQ codebooks (by_residual IVFADC): a pure
-# function of (sf_dir, coarse-centroid params, PQ params) — the
-# residual table is itself deterministic given the memoized centroids.
-_PQR_CB_CACHE: dict[tuple, list[list[list[int]]]] = {}
-
-
-def _trained_residual_codebooks(spark: SparkSession, sf_dir: str):
-    key = (sf_dir, _KM_K, _KM_ITERS, _PQ_M, _PQ_KS, _PQ_ITERS, _KM_DIM)
-    if key not in _PQR_CB_CACHE:
-        from hetman_spark.functions.similarity import (
-            pq_train_codebooks,
-            residual_projection,
-        )
-
-        e = _tp(spark, sf_dir, "embeddings")
-        resid = residual_projection(e, _trained_centroids(spark, sf_dir))
-        _, cb = pq_train_codebooks(
-            resid.select("vec_id", F.col("rv").alias("qv")),
-            m_sub=_PQ_M, ks=_PQ_KS, iters=_PQ_ITERS,
-            vec_col="qv", id_col="vec_id", dim=_KM_DIM, quantized=True,
-        )
-        _PQR_CB_CACHE[key] = cb
-    return _PQR_CB_CACHE[key]
-
-
 def q_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Residual-encoded IVFADC (similarity.ivfpq_topk_residual — the
     FAISS IndexIVFPQ DEFAULT, by_residual=True): PQ codebooks trained
@@ -3651,11 +3612,10 @@ def q_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _tp(spark, sf_dir, "embeddings")
     queries = e.orderBy("vec_id").limit(_IVT_NQ)
     return ivfpq_topk_residual(
-        e, queries, k=_IVT_TOPK, n_cells=_KM_K, km_iters=_KM_ITERS,
-        nprobe=_IVT_NPROBE, m_sub=_PQ_M, ks=_PQ_KS, pq_iters=_PQ_ITERS,
-        dim=_KM_DIM,
-        centroids=_trained_centroids(spark, sf_dir),
-        codebooks=_trained_residual_codebooks(spark, sf_dir),
+        e, queries,
+        _ann_constants(spark, sf_dir, "cells"),
+        _ann_constants(spark, sf_dir, "pq_residual"),
+        k=_IVT_TOPK, nprobe=_IVT_NPROBE,
     )
 
 

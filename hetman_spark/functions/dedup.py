@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hetman_spark.session import release
+
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Groups of byte-identical texts: (text_hash, keeper_id, n_copies,
@@ -515,6 +517,10 @@ def connected_components(
     cluster should set a checkpoint dir and swap in reliable
     .checkpoint() — one line, same plan shape.)
 
+    Each superseded label table is released as soon as the next one is
+    materialized, and the edge table on return or raise: after a call
+    the returned label table is the only block-manager residue.
+
     Deterministic on any cluster size/partitioning (min is
     commutative); raises if max_iters rounds don't converge (2^25
     chain depth) rather than returning a half-merged clustering.
@@ -529,56 +535,65 @@ def connected_components(
     edges = (
         pairs.select(a, b).union(pairs.select(b.alias("v"), a.alias("u")))
     ).localCheckpoint(eager=True)
-    # Seed labels with min(v, min neighbor) — exactly what round 1's
-    # propagate step would compute from the identity labeling, but as
-    # ONE partial-aggregated groupBy over the edge list instead of a
-    # full round (join + join + checkpoint + fingerprint collect).
-    # Every node appears as `v` in the symmetric edge list, so the
-    # seeded table covers the same node set; labels only ever decrease
-    # from here, so the fixpoint (and the returned clustering) is
-    # identical — r6 measured one fewer round on every CC entry.
-    labels = (
-        edges.groupBy("v").agg(F.min("u").alias("m"))
-        .select("v", F.least(F.col("v"), F.col("m")).alias("label"))
-    ).localCheckpoint(eager=True)
 
     def fp(lbl: DataFrame):
         # cast BEFORE the sum: BIGINT ids summed over millions of rows
         # overflow int64 under ANSI mode (which throws, not wraps)
         return lbl.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
 
-    fingerprint = fp(labels)
+    labels = None
+    try:
+        # Seed labels with min(v, min neighbor) — exactly what round 1's
+        # propagate step would compute from the identity labeling, but as
+        # ONE partial-aggregated groupBy over the edge list instead of a
+        # full round (join + join + checkpoint + fingerprint collect).
+        # Every node appears as `v` in the symmetric edge list, so the
+        # seeded table covers the same node set; labels only ever decrease
+        # from here, so the fixpoint (and the returned clustering) is
+        # identical — r6 measured one fewer round on every CC entry.
+        labels = (
+            edges.groupBy("v").agg(F.min("u").alias("m"))
+            .select("v", F.least(F.col("v"), F.col("m")).alias("label"))
+        ).localCheckpoint(eager=True)
+        fingerprint = fp(labels)
 
-    for it in range(max_iters):
-        nbr_min = (
-            edges.join(labels.withColumnRenamed("v", "u").withColumnRenamed("label", "lu"), "u")
-            .groupBy("v")
-            .agg(F.min("lu").alias("m"))
-        )
-        prop = (
-            labels.join(nbr_min, "v", "left")
-            .select("v", F.least("label", F.coalesce("m", "label")).alias("label"))
-        )
-        # label(v) is itself a node id, so it has a row in prop: jump
-        jumped = (
-            prop.alias("l1")
-            .join(
-                prop.select(F.col("v").alias("label"), F.col("label").alias("label2")).alias("l2"),
-                "label",
+        for it in range(max_iters):
+            nbr_min = (
+                edges.join(labels.withColumnRenamed("v", "u").withColumnRenamed("label", "lu"), "u")
+                .groupBy("v")
+                .agg(F.min("lu").alias("m"))
             )
-            .select(F.col("v"), F.col("label2").alias("label"))
+            prop = (
+                labels.join(nbr_min, "v", "left")
+                .select("v", F.least("label", F.coalesce("m", "label")).alias("label"))
+            )
+            # label(v) is itself a node id, so it has a row in prop: jump
+            jumped = (
+                prop.alias("l1")
+                .join(
+                    prop.select(F.col("v").alias("label"), F.col("label").alias("label2")).alias("l2"),
+                    "label",
+                )
+                .select(F.col("v"), F.col("label2").alias("label"))
+            )
+            superseded, labels = labels, jumped.localCheckpoint(eager=True)
+            release(superseded)
+            if stats is not None:
+                stats["rounds"] = it + 1
+            new_fp = fp(labels)
+            if new_fp == fingerprint:
+                return labels.select("v", F.col("label").alias("component"))
+            fingerprint = new_fp
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iters} rounds "
+            "(pathological chain > 2^25 deep?)"
         )
-        labels = jumped.localCheckpoint(eager=True)
-        if stats is not None:
-            stats["rounds"] = it + 1
-        new_fp = fp(labels)
-        if new_fp == fingerprint:
-            return labels.select("v", F.col("label").alias("component"))
-        fingerprint = new_fp
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iters} rounds "
-        "(pathological chain > 2^25 deep?)"
-    )
+    except BaseException:
+        if labels is not None:
+            release(labels)
+        raise
+    finally:
+        release(edges)
 
 
 def dedup_clusters(

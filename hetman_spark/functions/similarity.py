@@ -1,14 +1,28 @@
 """Similarity search over an embedding column (array<float>).
 
-- cosine_topk: brute-force exact top-k (the baseline; one broadcast
-  of the query batch, no shuffle of the corpus); cosine_topk_pandas
-  is its vectorized NumPy variant for wide batches where BLAS beats
-  codegen.
-- ivf_topk_quantized: IVF-style scale path — corpus assigned to
-  hyperplane_code_int cells (md5-derived integer planes over the
-  quantized vector); queries probe only their own cell, ranked by an
-  exact integer dot product.  ivf_topk_multiprobe adds Hamming-
-  adjacent probes, ivf_topk_trained probes k-means cells.
+One ANN stack.  Every index is built from the same three parts:
+
+- train_kmeans: the one Lloyd loop (integer-exact, deterministic).
+  One subspace gives the coarse IVF / k-means centroids
+  (train_kmeans(...)[0]); m_sub subspaces give PQ codebooks — in
+  IVFADC (Jegou et al., TPAMI 2011) the coarse quantizer and the
+  product sub-quantizers are the same k-means.  It returns driver-side
+  constants only and releases the projection it materialized.
+- centroid_dist_array / _nearest: squared quantized L2 from a vector
+  to every centroid of one packed constant; the nearest cell, or the
+  nprobe nearest cells.
+- _probe_topk: broadcast the query side, join it on the cell (or cross
+  join), drop the query's own id, score, and keep the top k per query
+  (row_number, ties to the lowest neighbor_id).
+
+Scorers take trained constants; training is the caller's step:
+
+- cosine_topk: brute-force exact top-k (float cosine).
+- ivf_topk_quantized: hyperplane_code_int cells (md5-derived integer
+  planes over the quantized vector); each query probes its own cell
+  or, with nprobe > 1, also its Hamming-adjacent cells
+  (probe_cells_int).
+- kmeans_quantized / ivf_topk_trained: k-means cells.
 - pq_topk / ivfpq_topk / ivfpq_topk_residual / sq8_topk: top-k over
   compressed vector codes.
 - semdedup (k-means semantic dedup) and knn_label_vote.
@@ -20,9 +34,13 @@ queries (dedup.bucket_pairs).  Dot products are pure JVM lambdas
 
 from __future__ import annotations
 
+import json
+
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from hetman_spark.session import release
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -37,6 +55,42 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _probe_topk(
+    cand: DataFrame,
+    qside: DataFrame,
+    name: str,
+    score: Column,
+    k: int,
+    desc: bool,
+    on: str | None = None,
+    carry: tuple[str, ...] = (),
+    rank_type: str = "int",
+) -> DataFrame:
+    """The probe-and-rank core of every top-k here: `cand` rows
+    (neighbor_id, ...) meet the broadcast `qside` rows (query_id, ...)
+    on the `on` cell column, or in a cross join when `on` is None; the
+    query's own id is dropped; `score` is evaluated as column `name`;
+    a row_number window per query, ordered by the score (descending
+    when `desc`) then neighbor_id, keeps ranks 1..k.
+
+    Returns (query_id, neighbor_id, *carry, name, rank).  The corpus
+    side is never shuffled in full: only the scored tuples reach the
+    window's shuffle."""
+    joined = (
+        cand.join(F.broadcast(qside), on)
+        if on
+        else cand.crossJoin(F.broadcast(qside))
+    )
+    scored = joined.where(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id", *carry, score.alias(name)
+    )
+    order = F.col(name).desc() if desc else F.col(name)
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    return scored.withColumn(
+        "rank", F.row_number().over(w).cast(rank_type)
+    ).where(F.col("rank") <= k)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -44,34 +98,23 @@ def cosine_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact top-k neighbors for each query row.
+    """Exact top-k neighbors for each query row by float cosine:
+    (query_id, neighbor_id, sim, rank).
 
     Plan: broadcast the (small) query set, evaluate cosine per
     (corpus row x query) pair map-side, then per-query top-k via a
     window.  The corpus is scanned once, never shuffled in full —
     only (query_id, neighbor_id, sim) tuples reach the top-k shuffle,
-    and AQE handles any hot query.
-    """
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
+    and AQE handles any hot query."""
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
     )
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cosine(F.col("cv"), F.col("qv")).alias("sim"))
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("qv"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _probe_topk(c, q, "sim", cosine(F.col("cv"), F.col("qv")), k, desc=True)
 
 
 def quantize_vec(vec: Column, scale: int = 1000) -> Column:
@@ -123,10 +166,8 @@ def plane_dots_int(
             # VERDICT What's-wrong #5), re-shipped with EVERY task; at
             # production plane/dim counts the matrix must travel as one
             # constant (or a broadcast table), never per-component.
-            import json as _json
-
             vals = [_md5_component_py(f"{seed}-{p}-", d) for d in range(dim)]
-            return F.from_json(F.lit(_json.dumps(vals)), "array<bigint>")
+            return F.from_json(F.lit(json.dumps(vals)), "array<bigint>")
         dim_idx = F.sequence(F.lit(0), F.size(qv) - 1)
         return F.transform(dim_idx, lambda d: _md5_component(f"{seed}-{p}-", d))
 
@@ -190,9 +231,12 @@ def probe_cells_int(
     without growing the index; the probe fan-out is a query-side
     explode, the corpus stays single-cell-assigned and
     partition-prunable.  Integer arithmetic end-to-end (engine-agnostic
-    ties: (|dot|, plane) sort key both sides)."""
+    ties: (|dot|, plane) sort key both sides).  nprobe=1 is the own
+    cell alone."""
     dts = plane_dots_int(vec, planes, seed, dim)
     cell = _cell_from_dots(dts, planes)
+    if nprobe == 1:
+        return F.array(cell)
     masks = F.array(*[F.lit(1 << p).cast("long") for p in range(planes)])
     ranked = F.array_sort(
         F.transform(
@@ -225,66 +269,25 @@ def ivf_topk_quantized(
     queries: DataFrame,
     k: int = 10,
     planes: int = 8,
+    nprobe: int = 1,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     dim: int | None = None,
 ) -> DataFrame:
     """IVF probe with integer-exact arithmetic end-to-end: cells from
-    hyperplane_code_int, ranking by quantized dot product.  Plan:
-    broadcast queries, equi-join on cell, window top-k.  Every number
-    is a BIGINT, so the result is deterministic across engines AND
-    cluster sizes (a float dot product near a plane's sign boundary
-    could flip a cell between engines)."""
-    from pyspark.sql import Window
+    hyperplane_code_int, ranking by quantized dot product —
+    (query_id, neighbor_id, dot_q, rank).  Every number is a BIGINT,
+    so the result is deterministic across engines AND cluster sizes (a
+    float dot product near a plane's sign boundary could flip a cell
+    between engines).
 
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        quantize_vec(F.col(vec_col)).alias("cq"),
-        hyperplane_code_int(F.col(vec_col), planes, dim=dim).alias("cell"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        quantize_vec(F.col(vec_col)).alias("qq"),
-        hyperplane_code_int(F.col(vec_col), planes, dim=dim).alias("cell"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "neighbor_id",
-            int_dot_sim(F.col("cq"), F.col("qq")).alias("dot_q"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot_q").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_q", "rank")
-    )
-
-
-def ivf_topk_multiprobe(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    planes: int = 8,
-    nprobe: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int | None = None,
-) -> DataFrame:
-    """IVF probe with multi-probe recall boost: each query explodes
-    into its nprobe candidate cells (probe_cells_int) and equi-joins
-    the single-cell-assigned corpus — same scale shape as
-    ivf_topk_quantized (broadcast query side, hash join on cell,
-    window top-k) with a ≤nprobe× query fan-out and unchanged corpus
-    layout.  A (query, neighbor) pair meets at most once because a
-    corpus row lives in exactly ONE cell and the probe list is
-    distinct — no dedup shuffle needed."""
-    from pyspark.sql import Window
-
+    Each query explodes into its nprobe candidate cells
+    (probe_cells_int: the own cell, plus the Hamming-adjacent cells of
+    its lowest-confidence planes when nprobe > 1) and equi-joins the
+    single-cell-assigned corpus: broadcast query side, hash join on
+    cell, window top-k.  A (query, neighbor) pair meets at most once
+    because a corpus row lives in exactly ONE cell and the probe list
+    is distinct — no dedup shuffle needed."""
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         quantize_vec(F.col(vec_col)).alias("cq"),
@@ -297,279 +300,32 @@ def ivf_topk_multiprobe(
             probe_cells_int(F.col(vec_col), planes, nprobe=nprobe, dim=dim)
         ).alias("cell"),
     )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "neighbor_id",
-            int_dot_sim(F.col("cq"), F.col("qq")).alias("dot_q"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot_q").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_q", "rank")
+    return _probe_topk(
+        c, q, "dot_q", int_dot_sim(F.col("cq"), F.col("qq")), k, desc=True, on="cell"
     )
 
 
-def centroid_dist_array(cents: list[list[int]], qv: Column) -> Column:
+def _packed_matrix(mat: list[list[int]]) -> Column:
+    """A list-of-int-vectors as ONE folded from_json literal (the r3
+    task-binary lesson: F.lit(nested list) expands to per-element
+    plan nodes; from_json folds to a single Literal)."""
+    return F.from_json(F.lit(json.dumps(mat)), "array<array<bigint>>")
+
+
+def centroid_dist_array(cents: list[list[int]], v: Column) -> Column:
     """array<struct<d:bigint, c:bigint>> of squared quantized L2
-    distances from `qv` to each centroid, centroid index attached.
+    distances from `v` to each centroid, centroid index attached.
     Struct field order (d, c) makes array_min/array_sort lexicographic:
     smallest distance first, ties to the lowest centroid index — the
-    same ORDER BY d, ci the DuckDB twins use.  Centroids are packed as
-    from_json folded constants (ONE Literal each, never per-component
-    nodes — the r3 task-binary lesson)."""
-    import json as _json
+    same ORDER BY d, ci the DuckDB twins use.
 
-    def dist(c: list[int]) -> Column:
-        packed = F.from_json(F.lit(_json.dumps(c)), "array<bigint>")
-        return F.aggregate(
-            F.zip_with(qv, packed, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    return F.array(
-        *[
-            F.struct(dist(c).alias("d"), F.lit(ci).cast("long").alias("c"))
-            for ci, c in enumerate(cents)
-        ]
-    )
-
-
-def train_kmeans_centroids(
-    corpus: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int | None = None,
-) -> tuple[DataFrame, list[list[int]]]:
-    """Lloyd's k-means training loop over quantized vectors —
-    integer-exact, deterministic (init = k lowest ids, argmin ties to
-    lowest centroid index, floor(sum/count) updates).  Returns
-    (checkpointed (vec_id, qv) projection, trained centroids).
-
-    Scale shape: assignment is map-side against packed centroid
-    constants (no join/shuffle); the update is ONE partial-aggregated
-    shuffle of k*dim groups per iteration; centroids live driver-side
-    (k*dim ints — the thing you broadcast, never shuffle)."""
-    q = corpus.select(
-        F.col(id_col).alias("vec_id"), quantize_vec(F.col(vec_col)).alias("qv")
-    ).localCheckpoint(eager=True)
-    if dim is None:
-        dim = q.select(F.size("qv")).first()[0]
-    cents = [list(r["qv"]) for r in q.orderBy("vec_id").limit(k).collect()]
-
-    for _ in range(iters):
-        assigned = q.select(
-            "qv", F.array_min(centroid_dist_array(cents, F.col("qv"))).alias("b")
-        )
-        sums = (
-            assigned.select(
-                F.col("b.c").alias("c"), F.posexplode("qv").alias("dim", "val")
-            )
-            .groupBy("c", "dim")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-        ).collect()  # k*dim rows — aggregate-level, never per-vector
-        by_c: dict[int, dict[int, int]] = {}
-        for r in sums:
-            # python // floors (negative-safe), matching floor(s/n)
-            by_c.setdefault(r["c"], {})[r["dim"]] = r["s"] // r["n"]
-        cents = [
-            [by_c[ci][d] for d in range(dim)] if ci in by_c else cents[ci]
-            for ci in range(len(cents))
-        ]
-    return q, cents
-
-
-def kmeans_quantized(
-    corpus: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int | None = None,
-    centroids: list[list[int]] | None = None,
-) -> DataFrame:
-    """Lloyd's k-means over QUANTIZED vectors with integer-exact
-    arithmetic end-to-end — the IVF-centroid trainer (replace the
-    hyperplane cells of ivf_topk_quantized with learned centroids) and
-    a fully-oracled iterative algorithm: fixed iteration count,
-    deterministic init (the k lowest vec_ids), argmin ties broken by
-    centroid index, centroid update floor(sum/count) — every number is
-    a BIGINT (or an exactly-representable double inside floor), so
-    Spark and DuckDB converge to IDENTICAL centroids and assignments.
-
-    Returns (vec_id, cluster_id, dist_q): final assignment + squared
-    quantized L2 distance.
-
-    Scale shape (the standard production k-means decomposition):
-    - assignment pass: k distance expressions over packed from_json
-      centroid constants — NO join, NO shuffle, pure map-side;
-    - update pass: posexplode to (cluster, dim) and ONE
-      partial-aggregated shuffle of k*dim groups;
-    - centroids live driver-side (k*dim ints — small by definition;
-      the thing you broadcast, never shuffle);
-    - the input projection is localCheckpointed once: every iteration
-      re-reads materialized (vec_id, qv) rows, not the upstream plan.
-    Empty clusters keep their previous centroid (deterministic on both
-    engines).
-
-    Pass `centroids` (e.g. memoized from an earlier deterministic
-    training run over the same corpus constants) to skip training and
-    only run the final map-side assignment."""
-    if centroids is not None:
-        q = corpus.select(
-            F.col(id_col).alias("vec_id"),
-            quantize_vec(F.col(vec_col)).alias("qv"),
-        )
-        cents = centroids
-    else:
-        q, cents = train_kmeans_centroids(
-            corpus, k, iters, vec_col, id_col, dim
-        )
-    return q.select(
-        "vec_id", F.array_min(centroid_dist_array(cents, F.col("qv"))).alias("b")
-    ).select(
-        "vec_id",
-        F.col("b.c").alias("cluster_id"),
-        F.col("b.d").alias("dist_q"),
-    )
-
-
-def ivf_topk_trained(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 8,
-    iters: int = 3,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int | None = None,
-    centroids: list[list[int]] | None = None,
-) -> DataFrame:
-    """The production IVF index, end to end: TRAIN centroids with
-    k-means (train_kmeans_centroids), ASSIGN each corpus row to its
-    nearest trained centroid, PROBE the nprobe nearest cells per query
-    — closing the train/assign/probe loop that ivf_topk_quantized's
-    data-independent hyperplane cells approximate.  Trained cells
-    follow the corpus density, so recall at equal cell/probe count
-    beats hyperplanes (measured in tests/test_functions.py).
-
-    Integer-exact end-to-end (quantized vectors, BIGINT distances and
-    dots, argmin/probe ties by centroid index then id), so Spark and
-    DuckDB agree bit-for-bit.
-
-    Scale shape — identical to the hyperplane IVF path plus training:
-    - training: iters × (map-side assignment + ONE k×dim partial-agg
-      shuffle); centroids are driver-side constants (k×dim ints);
-    - corpus assignment: map-side argmin against packed from_json
-      centroid constants — no join, no shuffle; at 100 TB the cell is
-      written ONCE as a partition column (partitionBy(cell)) and the
-      probe becomes a partition-pruned scan;
-    - probe: queries fan out ≤nprobe× (query-side explode), corpus
-      stays single-cell-assigned — a (query, neighbor) pair meets at
-      most once, no dedup shuffle;
-    - scoring: broadcast query side, equi-join on cell, window top-k —
-      only (query_id, neighbor_id, dot) tuples reach the shuffle.
-
-    Pass `centroids` to probe a pre-trained index (skip training)."""
-    from pyspark.sql import Window
-
-    if centroids is None:
-        _, centroids = train_kmeans_centroids(
-            corpus, n_cells, iters, vec_col, id_col, dim
-        )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        quantize_vec(F.col(vec_col)).alias("cq"),
-    ).withColumn(
-        "cell", F.array_min(centroid_dist_array(centroids, F.col("cq"))).getField("c")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        quantize_vec(F.col(vec_col)).alias("qq"),
-    ).withColumn(
-        "cell",
-        F.explode(
-            F.transform(
-                F.slice(
-                    F.array_sort(centroid_dist_array(centroids, F.col("qq"))),
-                    1,
-                    nprobe,
-                ),
-                lambda s: s.getField("c"),
-            )
-        ),
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "neighbor_id",
-            int_dot_sim(F.col("cq"), F.col("qq")).alias("dot_q"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot_q").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_q", "rank")
-    )
-
-
-def cosine_topk_pandas(
-    corpus: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """BLAS path: one Arrow-batched pandas UDF computes the cosine of
-    every corpus row against a fixed query vector with NumPy (matrix
-    multiply per batch) — wins over per-element codegen for wide
-    vectors (d >= ~256)."""
-    import numpy as np
-
-    qv = np.asarray(query_vec, dtype="float64")
-    qn = float(np.linalg.norm(qv))
-
-    @F.pandas_udf("double")
-    def cos_udf(vs: pd.Series) -> pd.Series:
-        # float64 accumulation to match the JVM double path bit-for-bit
-        mat = np.stack(vs.to_numpy()).astype("float64")
-        sims = (mat @ qv) / (np.linalg.norm(mat, axis=1) * qn)
-        return pd.Series(sims)
-
-    scored = corpus.select(F.col(id_col).alias("neighbor_id"), cos_udf(F.col(vec_col)).alias("sim"))
-    return scored.orderBy(F.col("sim").desc(), F.col("neighbor_id")).limit(k)
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (PQ) — the 100 TB ANN memory-compression path
-# ---------------------------------------------------------------------------
-
-
-def packed_centroid_dist_array(cents: list[list[int]], v: Column) -> Column:
-    """array<struct<d,c>> of squared quantized L2 distances from `v`
-    to each centroid — like centroid_dist_array, but the WHOLE
-    codebook travels as ONE from_json folded constant and the
-    per-centroid terms come from a single transform-with-index lambda
-    (one aggregate node total, not k) — both r3 lessons (task-binary
-    size, codegen-bomb) applied at once."""
-    import json as _json
-
-    packed = F.from_json(F.lit(_json.dumps(cents)), "array<array<bigint>>")
+    The whole centroid table travels as ONE from_json folded constant
+    and the per-centroid terms come from a single transform-with-index
+    lambda (one aggregate node total, not k) — both r3 lessons
+    (task-binary size, codegen bomb) applied at once.  Pass `v` as a
+    column reference: the lambda evaluates it once per centroid."""
     return F.transform(
-        packed,
+        _packed_matrix(cents),
         lambda c, i: F.struct(
             F.aggregate(
                 F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
@@ -581,134 +337,196 @@ def packed_centroid_dist_array(cents: list[list[int]], v: Column) -> Column:
     )
 
 
-def pq_train_codebooks(
+def _nearest(cents: list[list[int]], v: Column, nprobe: int | None = None) -> Column:
+    """The nearest centroid of `v` as a (d, c) struct; with `nprobe`,
+    the array<bigint> of the nprobe nearest centroid indexes, nearest
+    first.  Ties go to the lowest index both ways."""
+    dists = centroid_dist_array(cents, v)
+    if nprobe is None:
+        return F.array_min(dists)
+    return F.transform(
+        F.slice(F.array_sort(dists), 1, nprobe), lambda s: s.getField("c")
+    )
+
+
+def train_kmeans(
     corpus: DataFrame,
-    m_sub: int = 8,
-    ks: int = 8,
-    iters: int = 2,
+    k: int,
+    iters: int,
+    m_sub: int = 1,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int = 64,
     quantized: bool = False,
-) -> tuple[DataFrame, list[list[list[int]]]]:
-    """Train per-subspace PQ codebooks (Jegou et al. 2011, "Product
-    Quantization for Nearest Neighbor Search"): split each quantized
-    vector into m_sub contiguous subvectors and run Lloyd's k-means
-    independently in every subspace — deterministic (init = subvectors
-    of the ks lowest vec_ids, argmin ties to lowest index,
-    floor(sum/count) updates), integer-exact end-to-end.
+) -> list[list[list[int]]]:
+    """Lloyd's k-means over quantized vectors, run independently in
+    each of m_sub contiguous subspaces — integer-exact and
+    deterministic: init = the (sub)vectors of the k lowest ids, argmin
+    ties to the lowest centroid index, floor(sum/count) updates, and an
+    empty cluster keeps its centroid.  Spark and DuckDB (the
+    unrolled-CTE oracles) converge to IDENTICAL constants.
 
-    Returns (checkpointed (vec_id, qv) projection, cents) with
-    cents[m][ci] a ds-int centroid, ds = dim // m_sub.
+    Returns cents[m][ci], a ds-int centroid with ds = dim // m_sub
+    (dim read from the data).  m_sub=1 trains the coarse IVF / k-means
+    centroids (cents[0]); m_sub>1 trains PQ codebooks (Jegou et al.
+    2011, "Product Quantization for Nearest Neighbor Search").  With
+    quantized=True `vec_col` is taken as an already-integer array (the
+    cell residuals of the by_residual IVFADC variant) and quantize_vec
+    is skipped.
 
-    Scale shape: ALL subspaces train in the same pass — assignment is
-    map-side against packed codebook constants (one transform+aggregate
-    node per subspace, never k separate aggregates), and every
-    iteration pays ONE partial-aggregated shuffle keyed
-    (subspace, centroid, dim) — m_sub*ks*ds groups (512 rows here).
-    Codebooks live driver-side: m_sub*ks*ds ints — the thing you
-    broadcast, never shuffle.
-
-    With quantized=True the vec_col is taken as an already-integer
-    array (e.g. cell residuals for the by_residual IVFADC variant)
-    and quantize_vec is skipped."""
-    ds = dim // m_sub
+    Scale shape: the (id, qv) projection is materialized once and
+    every iteration re-reads it; assignment is map-side against packed
+    centroid constants (no join); each iteration pays ONE
+    partial-aggregated shuffle keyed (subspace, centroid, dim) —
+    m_sub*k*ds groups.  The centroids live driver-side (the thing you
+    broadcast, never shuffle), and the projection is released before
+    returning."""
     vec = F.col(vec_col) if quantized else quantize_vec(F.col(vec_col))
     q = corpus.select(
         F.col(id_col).alias("vec_id"), vec.alias("qv")
     ).localCheckpoint(eager=True)
-    init_rows = q.orderBy("vec_id").limit(ks).collect()
-    cents = [
-        [list(r["qv"])[m * ds:(m + 1) * ds] for r in init_rows]
-        for m in range(m_sub)
-    ]
+    try:
+        init = [list(r["qv"]) for r in q.orderBy("vec_id").limit(k).collect()]
+        ds = len(init[0]) // m_sub
+        cents = [[v[m * ds:(m + 1) * ds] for v in init] for m in range(m_sub)]
 
-    for _ in range(iters):
-        sel = q.select(
-            "qv",
-            *[
-                F.array_min(
-                    packed_centroid_dist_array(
-                        cents[m], F.slice(F.col("qv"), m * ds + 1, ds)
+        def sub(m: int) -> Column:
+            return F.slice(F.col("qv"), m * ds + 1, ds)
+
+        for _ in range(iters):
+            subs = F.array(
+                *[
+                    F.struct(
+                        F.lit(m).cast("long").alias("m"),
+                        _nearest(cents[m], sub(m))["c"].alias("c"),
+                        sub(m).alias("sv"),
                     )
-                )["c"].alias(f"_c{m}")
-                for m in range(m_sub)
-            ],
-        )
-        subs = F.array(
-            *[
-                F.struct(
-                    F.lit(m).cast("long").alias("m"),
-                    F.col(f"_c{m}").alias("c"),
-                    F.slice(F.col("qv"), m * ds + 1, ds).alias("sv"),
-                )
+                    for m in range(m_sub)
+                ]
+            )
+            sums = (
+                q.select(F.explode(subs).alias("s"))
+                .select("s.m", "s.c", F.posexplode("s.sv").alias("dim", "val"))
+                .groupBy("m", "c", "dim")
+                .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
+            ).collect()  # m_sub*k*ds rows — aggregate-level, never per-vector
+            by: dict[tuple[int, int], dict[int, int]] = {}
+            for r in sums:
+                # python // floors (negative-safe), matching floor(s/n)
+                by.setdefault((r["m"], r["c"]), {})[r["dim"]] = r["s"] // r["n"]
+            cents = [
+                [
+                    [by[(m, ci)][d] for d in range(ds)] if (m, ci) in by else cent
+                    for ci, cent in enumerate(cents[m])
+                ]
                 for m in range(m_sub)
             ]
-        )
-        sums = (
-            sel.select(F.explode(subs).alias("s"))
-            .select("s.m", "s.c", F.posexplode("s.sv").alias("dim", "val"))
-            .groupBy("m", "c", "dim")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-        ).collect()  # m_sub*ks*ds rows — aggregate-level, never per-vector
-        by: dict[tuple[int, int], dict[int, int]] = {}
-        for r in sums:
-            by.setdefault((r["m"], r["c"]), {})[r["dim"]] = r["s"] // r["n"]
-        cents = [
-            [
-                [by[(m, ci)][d] for d in range(ds)]
-                if (m, ci) in by else cents[m][ci]
-                for ci in range(ks)
-            ]
-            for m in range(m_sub)
-        ]
-    return q, cents
+        return cents
+    finally:
+        release(q)
 
 
-def _pq_code_expr(
-    cents: list[list[list[int]]], ds: int, m_sub: int, vec: Column | None = None
-) -> Column:
+def kmeans_quantized(
+    corpus: DataFrame,
+    centroids: list[list[int]],
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """The map-side k-means assignment against trained `centroids`
+    (train_kmeans(...)[0]): (vec_id, cluster_id, dist_q) — nearest
+    centroid and its squared quantized L2 distance, ties to the lowest
+    centroid index.  Every number is a BIGINT, so Spark and DuckDB
+    agree on the assignment.  No join, no shuffle: the centroids are
+    one packed constant."""
+    q = corpus.select(
+        F.col(id_col).alias("vec_id"), quantize_vec(F.col(vec_col)).alias("qv")
+    )
+    return q.select(
+        "vec_id", _nearest(centroids, F.col("qv")).alias("b")
+    ).select(
+        "vec_id",
+        F.col("b.c").alias("cluster_id"),
+        F.col("b.d").alias("dist_q"),
+    )
+
+
+def ivf_topk_trained(
+    corpus: DataFrame,
+    queries: DataFrame,
+    centroids: list[list[int]],
+    k: int = 10,
+    nprobe: int = 2,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """The production IVF index over trained `centroids`
+    (train_kmeans(...)[0]): ASSIGN each corpus row to its nearest
+    centroid, PROBE the nprobe nearest cells per query, rank by
+    integer dot — (query_id, neighbor_id, dot_q, rank).  Trained cells
+    follow the corpus density, so recall at equal cell/probe count
+    beats ivf_topk_quantized's data-independent hyperplanes (measured
+    in tests/test_functions.py).
+
+    Integer-exact end-to-end (quantized vectors, BIGINT distances and
+    dots, argmin/probe ties by centroid index then id), so Spark and
+    DuckDB agree bit-for-bit.
+
+    Scale shape — the hyperplane IVF path with learned cells:
+    - corpus assignment: map-side argmin against the packed centroid
+      constant — no join, no shuffle; at 100 TB the cell is written
+      ONCE as a partition column (partitionBy(cell)) and the probe
+      becomes a partition-pruned scan;
+    - probe: queries fan out ≤nprobe× (query-side explode), corpus
+      stays single-cell-assigned — a (query, neighbor) pair meets at
+      most once, no dedup shuffle;
+    - scoring: broadcast query side, equi-join on cell, window top-k —
+      only (query_id, neighbor_id, dot) tuples reach the shuffle."""
+    c = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        quantize_vec(F.col(vec_col)).alias("cq"),
+    ).withColumn("cell", _nearest(centroids, F.col("cq"))["c"])
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        quantize_vec(F.col(vec_col)).alias("qq"),
+    ).withColumn("cell", F.explode(_nearest(centroids, F.col("qq"), nprobe)))
+    return _probe_topk(
+        c, q, "dot_q", int_dot_sim(F.col("cq"), F.col("qq")), k, desc=True, on="cell"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Product quantization (PQ) — the 100 TB ANN memory-compression path
+# ---------------------------------------------------------------------------
+
+
+def _pq_subvec(codebooks: list[list[list[int]]], v: Column, m: int) -> Column:
+    ds = len(codebooks[0][0])
+    return F.slice(v, m * ds + 1, ds)
+
+
+def _pq_code_expr(codebooks: list[list[list[int]]], v: Column) -> Column:
     """array<long> of per-subspace nearest-codebook-centroid indexes
-    for `vec` (default: the row's quantized vector column `qv`) — the
-    PQ encoding."""
-    v = F.col("qv") if vec is None else vec
+    of `v` — the PQ encoding."""
     return F.array(
         *[
-            F.array_min(
-                packed_centroid_dist_array(
-                    cents[m], F.slice(v, m * ds + 1, ds)
-                )
-            )["c"]
-            for m in range(m_sub)
+            _nearest(cb, _pq_subvec(codebooks, v, m))["c"]
+            for m, cb in enumerate(codebooks)
         ]
     )
 
 
-def _pq_dist_table_expr(
-    cents: list[list[list[int]]], ds: int, m_sub: int, vec: Column | None = None
-) -> Column:
+def _pq_dist_table_expr(codebooks: list[list[list[int]]], v: Column) -> Column:
     """array<array<long>>: dt[m][ci] = squared L2 distance from the
-    row's m-th query subvector (of `vec`, default column `qv`) to
-    codebook centroid ci — the per-query ADC lookup tables, built on
-    the tiny broadcast side."""
-    import json as _json
-
-    v = F.col("qv") if vec is None else vec
-
-    def _dist_table(m: int) -> Column:
-        # closure factory, NOT a default-arg lambda: a 2-param lambda
-        # would be read by PySpark as (element, index) and clobber m
-        sub = F.slice(v, m * ds + 1, ds)
-        return F.transform(
-            F.from_json(F.lit(_json.dumps(cents[m])), "array<array<bigint>>"),
-            lambda c: F.aggregate(
-                F.zip_with(sub, c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ),
-        )
-
-    return F.array(*[_dist_table(m) for m in range(m_sub)])
+    m-th subvector of `v` to codebook centroid ci — the per-query ADC
+    lookup tables, built on the tiny broadcast side."""
+    return F.array(
+        *[
+            F.transform(
+                centroid_dist_array(cb, _pq_subvec(codebooks, v, m)),
+                lambda s: s.getField("d"),
+            )
+            for m, cb in enumerate(codebooks)
+        ]
+    )
 
 
 def _pq_adc_expr(m_sub: int) -> Column:
@@ -728,175 +546,94 @@ def _pq_adc_expr(m_sub: int) -> Column:
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
+    codebooks: list[list[list[int]]],
     k: int = 5,
-    m_sub: int = 8,
-    ks: int = 8,
-    iters: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int = 64,
-    codebooks: list[list[list[int]]] | None = None,
 ) -> DataFrame:
-    """PQ asymmetric-distance top-k (Jegou et al. 2011's ADC): encode
-    every corpus vector as m_sub codebook indexes (map-side argmin per
-    subspace), precompute each query's distance TABLE to every
-    codebook centroid (m_sub x ks ints, on the tiny query side), and
-    score a candidate as the sum of m_sub table lookups — 8 lookups
-    replacing a 64-dim dot product, and the corpus compressed to
-    m_sub bytes/vector.
+    """PQ asymmetric-distance top-k (Jegou et al. 2011's ADC) over
+    trained `codebooks` (train_kmeans with m_sub subspaces):
+    (query_id, neighbor_id, adc_dist, rank).  Every corpus vector is
+    encoded as m_sub codebook indexes (map-side argmin per subspace),
+    each query gets a distance TABLE to every codebook centroid
+    (m_sub x ks ints, on the tiny query side), and a candidate scores
+    as the sum of m_sub table lookups — 8 lookups replacing a 64-dim
+    dot product, and the corpus compressed to m_sub bytes/vector.
 
     This entry scores the whole corpus (the ADC inner loop); at
-    100 TB the same loop runs per-IVF-cell after ivf_topk_trained's
-    coarse pruning (IVFADC — see ivfpq_topk for the composed index) —
-    the corpus side here is already encode-once/scan-many and NEVER
-    shuffled (the query side with its dist tables is broadcast).
-    Integer-exact: quantized vectors, integer squared-L2 tables,
-    BIGINT sums; ties break to the lowest neighbor id.
-
-    Pass `codebooks` (deterministic training output, memoizable) to
-    skip the training loop."""
-    if codebooks is not None:
-        q = corpus.select(
-            F.col(id_col).alias("vec_id"),
-            quantize_vec(F.col(vec_col)).alias("qv"),
-        )
-        cents = codebooks
-    else:
-        q, cents = pq_train_codebooks(
-            corpus, m_sub=m_sub, ks=ks, iters=iters,
-            vec_col=vec_col, id_col=id_col, dim=dim,
-        )
-    ds = dim // m_sub
-    encoded = q.select("vec_id", _pq_code_expr(cents, ds, m_sub).alias("code"))
-    qside = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            quantize_vec(F.col(vec_col)).alias("qv"),
-        )
-        .select("query_id", _pq_dist_table_expr(cents, ds, m_sub).alias("dt"))
-    )
-
-    adc = _pq_adc_expr(m_sub)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        encoded.crossJoin(F.broadcast(qside))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            adc.alias("adc_dist"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+    100 TB the same loop runs per-IVF-cell after coarse pruning
+    (IVFADC — see ivfpq_topk for the composed index) — the corpus side
+    here is already encode-once/scan-many and NEVER shuffled (the
+    query side with its dist tables is broadcast).  Integer-exact:
+    quantized vectors, integer squared-L2 tables, BIGINT sums; ties
+    break to the lowest neighbor id."""
+    encoded = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        quantize_vec(F.col(vec_col)).alias("qv"),
+    ).select("neighbor_id", _pq_code_expr(codebooks, F.col("qv")).alias("code"))
+    qside = queries.select(
+        F.col(id_col).alias("query_id"),
+        quantize_vec(F.col(vec_col)).alias("qv"),
+    ).select("query_id", _pq_dist_table_expr(codebooks, F.col("qv")).alias("dt"))
+    return _probe_topk(
+        encoded, qside, "adc_dist", _pq_adc_expr(len(codebooks)), k,
+        desc=False, rank_type="long",
     )
 
 
 def ivfpq_topk(
     corpus: DataFrame,
     queries: DataFrame,
+    centroids: list[list[int]],
+    codebooks: list[list[list[int]]],
     k: int = 5,
-    n_cells: int = 8,
-    km_iters: int = 3,
     nprobe: int = 2,
-    m_sub: int = 8,
-    ks: int = 8,
-    pq_iters: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int = 64,
-    centroids: list[list[int]] | None = None,
-    codebooks: list[list[list[int]]] | None = None,
 ) -> DataFrame:
     """The COMPOSED production ANN index — IVF coarse pruning + PQ
     compressed scoring (Jegou et al. 2011's IVFADC structure, in the
     no-residual variant FAISS exposes as IndexIVFPQ(by_residual=False):
     codebooks quantize the raw vectors, not the cell residuals, so the
     coarse quantizer and the product quantizer stay independently
-    trained/oracled constants):
+    trained/oracled constants).  Takes the trained coarse `centroids`
+    and PQ `codebooks` (both from train_kmeans):
 
-      1. TRAIN: k-means cell centroids (train_kmeans_centroids) and
-         per-subspace PQ codebooks (pq_train_codebooks) — both
-         deterministic integer-exact, both driver-side constants;
-      2. ENCODE: every corpus vector gets its nearest cell (map-side
+      1. ENCODE: every corpus vector gets its nearest cell (map-side
          argmin) and its m_sub-byte PQ code (map-side argmin per
          subspace) — ONE pass, no shuffle; at 100 TB this table is
          written partitionBy(cell) with the code column, the corpus
          re-read never touches raw vectors again;
-      3. PROBE: each query expands to its nprobe nearest cells
+      2. PROBE: each query expands to its nprobe nearest cells
          (query-side explode) with its ADC distance tables
          (m_sub x ks ints) on the broadcast side;
-      4. SCORE: equi-join on cell, ADC = m_sub table lookups per
+      3. SCORE: equi-join on cell, ADC = m_sub table lookups per
          candidate, window top-k (ties to lowest neighbor id).
 
     The probe join is the ONLY distributed step that scales with the
     corpus, it is cell-pruned (nprobe/n_cells of the data), and its
     payload per candidate is (id, cell, m_sub codes) — the raw
-    vectors stay in stage 2."""
-    from pyspark.sql import Window
-
-    if centroids is None:
-        _, centroids = train_kmeans_centroids(
-            corpus, n_cells, km_iters, vec_col, id_col, dim
-        )
-    if codebooks is None:
-        _, codebooks = pq_train_codebooks(
-            corpus, m_sub=m_sub, ks=ks, iters=pq_iters,
-            vec_col=vec_col, id_col=id_col, dim=dim,
-        )
-    ds = dim // m_sub
-    q = corpus.select(
-        F.col(id_col).alias("vec_id"),
+    vectors stay in the encode stage."""
+    encoded = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
         quantize_vec(F.col(vec_col)).alias("qv"),
-    )
-    encoded = q.select(
-        "vec_id",
-        F.array_min(centroid_dist_array(centroids, F.col("qv")))
-        .getField("c")
-        .alias("cell"),
-        _pq_code_expr(codebooks, ds, m_sub).alias("code"),
+    ).select(
+        "neighbor_id",
+        _nearest(centroids, F.col("qv"))["c"].alias("cell"),
+        _pq_code_expr(codebooks, F.col("qv")).alias("code"),
     )
     qside = queries.select(
         F.col(id_col).alias("query_id"),
         quantize_vec(F.col(vec_col)).alias("qv"),
     ).select(
         "query_id",
-        _pq_dist_table_expr(codebooks, ds, m_sub).alias("dt"),
-        F.explode(
-            F.transform(
-                F.slice(
-                    F.array_sort(centroid_dist_array(centroids, F.col("qv"))),
-                    1,
-                    nprobe,
-                ),
-                lambda s: s.getField("c"),
-            )
-        ).alias("cell"),
+        _pq_dist_table_expr(codebooks, F.col("qv")).alias("dt"),
+        F.explode(_nearest(centroids, F.col("qv"), nprobe)).alias("cell"),
     )
-    scored = (
-        encoded.join(F.broadcast(qside), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _pq_adc_expr(m_sub).alias("adc_dist"),
-        )
+    return _probe_topk(
+        encoded, qside, "adc_dist", _pq_adc_expr(len(codebooks)), k,
+        desc=False, on="cell", rank_type="long",
     )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-    )
-
-
-def _packed_matrix(mat: list[list[int]]) -> Column:
-    """A list-of-int-vectors as ONE folded from_json literal (the r3
-    task-binary lesson: F.lit(nested list) expands to per-element
-    plan nodes; from_json folds to a single Literal)."""
-    import json as _json
-
-    return F.from_json(F.lit(_json.dumps(mat)), "array<array<bigint>>")
 
 
 def residual_projection(
@@ -909,21 +646,18 @@ def residual_projection(
     integer residual rv = qv - centroid[cell] — the corpus projection
     the by_residual IVFADC variant trains and encodes on.  Map-side
     only (argmin + zip_with against packed constants, no shuffle)."""
-    cc = _packed_matrix(centroids)
     q = corpus.select(
         F.col(id_col).alias("vec_id"), quantize_vec(F.col(vec_col)).alias("qv")
     )
     assigned = q.select(
-        "vec_id",
-        "qv",
-        F.array_min(centroid_dist_array(centroids, F.col("qv")))["c"].alias("cell"),
+        "vec_id", "qv", _nearest(centroids, F.col("qv"))["c"].alias("cell")
     )
     return assigned.select(
         "vec_id",
         "cell",
         F.zip_with(
             F.col("qv"),
-            F.element_at(cc, (F.col("cell") + 1).cast("int")),
+            F.element_at(_packed_matrix(centroids), (F.col("cell") + 1).cast("int")),
             lambda a, b: a - b,
         ).alias("rv"),
     )
@@ -932,118 +666,68 @@ def residual_projection(
 def ivfpq_topk_residual(
     corpus: DataFrame,
     queries: DataFrame,
+    centroids: list[list[int]],
+    codebooks: list[list[list[int]]],
     k: int = 5,
-    n_cells: int = 8,
-    km_iters: int = 3,
     nprobe: int = 2,
-    m_sub: int = 8,
-    ks: int = 8,
-    pq_iters: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int = 64,
-    centroids: list[list[int]] | None = None,
-    codebooks: list[list[list[int]]] | None = None,
 ) -> DataFrame:
     """IVFADC with RESIDUAL encoding — FAISS IndexIVFPQ's default
     (by_residual=True), completing ivfpq_topk's no-residual variant:
     the product quantizer encodes each vector's offset FROM its coarse
     cell centroid rather than the raw vector, so the ks codewords per
     subspace only have to cover the (much tighter) within-cell spread
-    — the reason FAISS defaults to it.
+    — the reason FAISS defaults to it.  `codebooks` MUST be
+    residual-trained: train_kmeans(residual_projection(corpus,
+    centroids), ..., vec_col="rv", quantized=True).
 
-      1. TRAIN: coarse k-means centroids as before; PQ codebooks on
-         the RESIDUALS (pq_train_codebooks(quantized=True) over
-         residual_projection's rv column) — training is downstream of
-         assignment, the one extra dependency residual encoding costs;
-      2. ENCODE: cell + m_sub residual codes, ONE map-side pass
+      1. ENCODE: cell + m_sub residual codes, ONE map-side pass
          (residual is a zip_with against the packed centroid matrix);
-      3. PROBE: a query's distance table is now PER (query, cell) —
-         the residual of the query w.r.t. each PROBED cell's centroid
+      2. PROBE: a query's distance table is PER (query, cell) — the
+         residual of the query w.r.t. each PROBED cell's centroid
          (nq x nprobe rows, still tiny, still broadcast);
-      4. SCORE: equi-join on cell; because a (query, candidate) pair
+      3. SCORE: equi-join on cell; because a (query, candidate) pair
          meets in exactly one cell, the per-cell tables stay exact.
 
     Same scale shape as ivfpq_topk: the probe join is the only
     corpus-scaled step, cell-pruned, payload (id, cell, codes); raw
     vectors never leave the encode stage.  Integer-exact end-to-end;
-    ties break (adc_dist, neighbor_id).
-
-    Accepts pre-trained `centroids`/`codebooks` (the codebooks MUST
-    then be residual-trained — e.g. the memoized entry constants)."""
-    from pyspark.sql import Window
-
-    if centroids is None:
-        _, centroids = train_kmeans_centroids(
-            corpus, n_cells, km_iters, vec_col, id_col, dim
-        )
-    resid = residual_projection(corpus, centroids, vec_col, id_col)
-    if codebooks is None:
-        _, codebooks = pq_train_codebooks(
-            resid.select("vec_id", F.col("rv").alias("qv")),
-            m_sub=m_sub, ks=ks, iters=pq_iters,
-            vec_col="qv", id_col="vec_id", dim=dim, quantized=True,
-        )
-    ds = dim // m_sub
-    encoded = resid.select(
-        "vec_id",
+    ties break (adc_dist, neighbor_id)."""
+    encoded = residual_projection(corpus, centroids, vec_col, id_col).select(
+        F.col("vec_id").alias("neighbor_id"),
         "cell",
-        _pq_code_expr(codebooks, ds, m_sub, vec=F.col("rv")).alias("code"),
+        _pq_code_expr(codebooks, F.col("rv")).alias("code"),
     )
-    cc = _packed_matrix(centroids)
     probed = queries.select(
         F.col(id_col).alias("query_id"),
         quantize_vec(F.col(vec_col)).alias("qv"),
     ).select(
         "query_id",
         "qv",
-        F.explode(
-            F.transform(
-                F.slice(
-                    F.array_sort(centroid_dist_array(centroids, F.col("qv"))),
-                    1,
-                    nprobe,
-                ),
-                lambda s: s.getField("c"),
-            )
-        ).alias("cell"),
+        F.explode(_nearest(centroids, F.col("qv"), nprobe)).alias("cell"),
     )
     qr = F.zip_with(
         F.col("qv"),
-        F.element_at(cc, (F.col("cell") + 1).cast("int")),
+        F.element_at(_packed_matrix(centroids), (F.col("cell") + 1).cast("int")),
         lambda a, b: a - b,
     )
     qside = probed.select(
-        "query_id",
-        "cell",
-        _pq_dist_table_expr(codebooks, ds, m_sub, vec=qr).alias("dt"),
+        "query_id", "cell", _pq_dist_table_expr(codebooks, qr).alias("dt")
     )
-    scored = (
-        encoded.join(F.broadcast(qside), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _pq_adc_expr(m_sub).alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+    return _probe_topk(
+        encoded, qside, "adc_dist", _pq_adc_expr(len(codebooks)), k,
+        desc=False, on="cell", rank_type="long",
     )
 
 
 def semdedup(
     corpus: DataFrame,
-    k: int = 8,
-    iters: int = 3,
+    centroids: list[list[int]],
     tau_num: int = 4,
     tau_den: int = 25,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int | None = None,
-    centroids: list[list[int]] | None = None,
     pandas_gram: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
@@ -1056,7 +740,7 @@ def semdedup(
     No reference analog (the reference ships logs, not corpora); this
     is the embedding-space near-dup pass the LLM-pipeline brief calls
     for, composed from pieces that are each already oracled: k-means
-    training (train_kmeans_centroids), integer-cosine verification
+    centroids (train_kmeans(...)[0]), integer-cosine verification
     (the embedding_neardup_verified inequality), and transitive
     clustering (dedup.connected_components).
 
@@ -1072,34 +756,23 @@ def semdedup(
     Scale shape — the quadratic is BOUNDED BY DESIGN (the paper's own
     trick: k clusters cap pair counts at sum(c_i^2/2), and k grows
     with the corpus — SemDeDup used 110k clusters at LAION scale):
-    - training: map-side assignment + ONE k*dim partial-agg shuffle
-      per iteration, centroids driver-side;
-    - assignment: map-side argmin vs packed from_json constants;
+    - assignment: map-side argmin vs the packed centroid constant;
     - pair generation (pandas_gram=True, default): ONE shuffle keyed
       on the cluster id, then a per-cluster NumPy gram matrix in an
-      Arrow batch (the cosine_topk_pandas BLAS precedent — a dense
-      c_i x c_i integer matmul beats 64 codegen multiply-adds per
-      pair by ~7x measured at sf0.1); task granularity = cluster,
+      Arrow batch (a dense c_i x c_i integer matmul beats 64 codegen
+      multiply-adds per pair by ~7x measured at sf0.1); task
+      granularity = cluster,
       exactly the paper's unit of work.  pandas_gram=False keeps the
       pure-Catalyst self equi-join ON THE CELL KEY (never a global
       cross join) — ANSI-checked arithmetic, pytest-pinned to produce
       the identical pair set;
     - clustering: O(log n) keyed self-joins of (id, label) pairs;
     - keeper: one window per component over (id, dist) tuples."""
-    from pyspark.sql import Window
-
-    q, cents = (
-        (corpus.select(
-            F.col(id_col).alias("vec_id"),
-            quantize_vec(F.col(vec_col)).alias("qv"),
-        ).localCheckpoint(eager=True), centroids)
-        if centroids is not None
-        else train_kmeans_centroids(corpus, k, iters, vec_col, id_col, dim)
+    q = corpus.select(
+        F.col(id_col).alias("vec_id"), quantize_vec(F.col(vec_col)).alias("qv")
     )
     assigned = q.select(
-        "vec_id",
-        "qv",
-        F.array_min(centroid_dist_array(cents, F.col("qv"))).alias("b"),
+        "vec_id", "qv", _nearest(centroids, F.col("qv")).alias("b")
     ).select(
         "vec_id",
         "qv",
@@ -1213,7 +886,7 @@ def sq8_train_stats(corpus: DataFrame, vec_col: str = "embedding",
     `mns`/`mxs` array columns.
 
     Faiss's ScalarQuantizer(QT_8bit) analog — the third classic
-    compression next to PQ (pq_train_codebooks) and IVF cells: each
+    compression next to PQ codebooks and IVF cells (train_kmeans): each
     dimension is affinely mapped to 0..255, so a 64-dim float vector
     stores in 64 bytes (8x).  Re-expresses the ANN-index requirement
     the same way the reference ships raw payloads (hetman has no
@@ -1277,8 +950,6 @@ def sq8_topk(
     all in one codegen stage, no corpus shuffle; the only wide op is
     the per-query top-k window over nq x corpus candidate rows, the
     same shape every ANN entry here carries."""
-    from pyspark.sql import Window
-
     stats = sq8_train_stats(corpus, vec_col, scale)
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -1291,22 +962,10 @@ def sq8_topk(
     cand = cand.select(
         "neighbor_id", _sq8_recon(F.col("xi"), F.col("mns"), F.col("mxs")).alias("rv")
     )
-    scored = (
-        cand.crossJoin(F.broadcast(q))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            int_dot_sim(F.col("rv"), F.col("qv")).alias("score"),
-        )
+    return _probe_topk(
+        cand, q, "score", int_dot_sim(F.col("rv"), F.col("qv")), k,
+        desc=True, rank_type="long",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return scored.select(
-        "query_id", "neighbor_id", "score",
-        F.row_number().over(w).cast("long").alias("rank"),
-    ).where(F.col("rank") <= k)
 
 
 def knn_label_vote(
@@ -1331,10 +990,9 @@ def knn_label_vote(
     Scale shape: query batch broadcast, corpus scan map-side, one
     window per query for the top-k cut, one tiny groupBy(query,label)
     partial-agg for the vote.  At 100 TB with a large query set the
-    crossJoin becomes a blocked matrix multiply (cosine_topk_pandas);
-    the vote/aggregation shape is unchanged."""
-    from pyspark.sql import Window
-
+    crossJoin becomes a blocked matrix multiply (the per-cluster
+    NumPy gram of semdedup is the in-repo precedent); the
+    vote/aggregation shape is unchanged."""
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(label_col).cast("long").alias("true_label"),
@@ -1345,21 +1003,10 @@ def knn_label_vote(
         F.col(label_col).cast("long").alias("nb_label"),
         quantize_vec(F.col(vec_col), scale).alias("xi"),
     )
-    scored = (
-        cand.crossJoin(F.broadcast(q))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "true_label", "neighbor_id", "nb_label",
-            int_dot_sim(F.col("xi"), F.col("qv")).alias("score"),
-        )
+    top = _probe_topk(
+        cand, q, "score", int_dot_sim(F.col("xi"), F.col("qv")), k,
+        desc=True, carry=("true_label", "nb_label"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    top = scored.select(
-        "query_id", "true_label", "nb_label",
-        F.row_number().over(w).alias("rn"),
-    ).where(F.col("rn") <= k)
     votes = top.groupBy("query_id", "true_label", "nb_label").agg(
         F.count(F.lit(1)).alias("votes")
     )

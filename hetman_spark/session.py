@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -93,3 +93,11 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def release(df: DataFrame) -> None:
+    """Drop the blocks of a DataFrame returned by localCheckpoint (or
+    checkpoint): `df` must be that frame itself, not a projection of
+    it.  Reading it afterwards fails loudly
+    (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) instead of recomputing."""
+    df._jdf.logicalPlan().rdd().unpersist(False)  # noqa: SLF001

@@ -20,7 +20,7 @@ from hetman_spark.functions.multimodal import (
     synth_media,
     with_media_metadata,
 )
-from hetman_spark.functions.similarity import cosine_topk, cosine_topk_pandas, ivf_topk_quantized
+from hetman_spark.functions.similarity import cosine_topk, ivf_topk_quantized, train_kmeans
 from hetman_spark.functions.text import text_stats
 
 
@@ -108,15 +108,6 @@ def test_cosine_topk_exact(spark, vectors):
     assert out[0]["neighbor_id"] == 1  # identical direction -> sim ~1
     assert out[0]["sim"] == pytest.approx(1.0, abs=1e-6)
     assert out[0]["rank"] == 1
-
-
-def test_cosine_topk_pandas_matches_jvm(spark, vectors):
-    qv = vectors.filter("vec_id = 0").collect()[0]["embedding"]
-    jvm = cosine_topk(vectors, vectors.filter("vec_id = 0"), k=5).collect()
-    blas = cosine_topk_pandas(vectors.filter("vec_id != 0"), list(qv), k=5).collect()
-    assert [r["neighbor_id"] for r in jvm] == [r["neighbor_id"] for r in blas]
-    for a, b in zip(jvm, blas):
-        assert a["sim"] == pytest.approx(b["sim"], abs=1e-9)
 
 
 def test_ivf_topk_probes_own_cell(spark, vectors):
@@ -261,8 +252,6 @@ def test_ivf_multiprobe_superset_of_single_probe(spark, vectors):
     (candidate sets are supersets) and top-ranked results at least as
     similar."""
     from hetman_spark.functions.similarity import (
-        ivf_topk_multiprobe,
-        ivf_topk_quantized,
         probe_cells_int,
         hyperplane_code_int,
     )
@@ -271,7 +260,7 @@ def test_ivf_multiprobe_superset_of_single_probe(spark, vectors):
     dim = vectors.select(F.size("embedding")).first()[0]
     queries = vectors.orderBy("vec_id").limit(3)
     single = ivf_topk_quantized(vectors, queries, k=5, dim=dim)
-    multi = ivf_topk_multiprobe(vectors, queries, k=5, nprobe=3, dim=dim)
+    multi = ivf_topk_quantized(vectors, queries, k=5, nprobe=3, dim=dim)
     # probe list contains the own cell for every row
     chk = vectors.select(
         hyperplane_code_int(F.col("embedding"), dim=dim).alias("cell"),
@@ -325,17 +314,19 @@ def test_kmeans_quantized_separates_and_partition_invariant(spark):
     rows = [(i, [1.0 + 0.001 * i, 1.0, 1.0, 1.0]) for i in range(10)]
     rows += [(i, [-1.0 - 0.001 * i, -1.0, -1.0, -1.0]) for i in range(10, 20)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    cents = train_kmeans(df, k=2, iters=3)[0]
     out = sorted(
         (r["vec_id"], r["cluster_id"], r["dist_q"])
-        for r in kmeans_quantized(df, k=2, iters=3, dim=4).collect()
+        for r in kmeans_quantized(df, cents).collect()
     )
     by_id = dict((v, c) for v, c, _ in out)
     assert len({by_id[i] for i in range(10)}) == 1
     assert len({by_id[i] for i in range(10, 20)}) == 1
     assert by_id[0] != by_id[10]
+    shuffled = df.repartition(7)
     out2 = sorted(
         (r["vec_id"], r["cluster_id"], r["dist_q"])
-        for r in kmeans_quantized(df.repartition(7), k=2, iters=3, dim=4).collect()
+        for r in kmeans_quantized(shuffled, train_kmeans(shuffled, 2, 3)[0]).collect()
     )
     assert out == out2
 
@@ -350,12 +341,48 @@ def test_kmeans_empty_cluster_keeps_centroid(spark):
         [(0, [0.0, 0.0]), (1, [0.0, 0.0]), (2, [5.0, 5.0])],
         "vec_id long, embedding array<float>",
     )
-    out = kmeans_quantized(df, k=3, iters=2, dim=2).collect()
+    out = kmeans_quantized(df, train_kmeans(df, k=3, iters=2)[0]).collect()
     assert len(out) == 3
     # point 1 ties between centroid0 (same position) and itself as
     # centroid1 -> lowest index wins deterministically
     by_id = {r["vec_id"]: r["cluster_id"] for r in out}
     assert by_id[0] == 0 and by_id[1] == 0 and by_id[2] == 2
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: SLF001
+
+
+def test_train_kmeans_releases_its_projection(spark):
+    """Training materializes its (id, qv) projection for the Lloyd
+    iterations and releases it before returning the constants: no
+    persistent RDD outlives the call, for centroids or codebooks."""
+    rows = [(i, [float(i % 5), float(i % 3), 1.0, -1.0]) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    before = _persistent_rdds(spark)
+    cents = train_kmeans(df, k=3, iters=2)
+    books = train_kmeans(df, k=2, iters=2, m_sub=2)
+    assert _persistent_rdds(spark) - before == set()
+    assert len(cents) == 1 and len(cents[0]) == 3 and len(cents[0][0]) == 4
+    assert len(books) == 2 and all(len(c[0]) == 2 for c in books)
+
+
+def test_connected_components_releases_intermediates(spark):
+    """The edge table, the seed labels and every superseded round's
+    labels are released: after a call the only new persistent RDD is
+    the returned label table, which still reads."""
+    from hetman_spark.functions.dedup import connected_components
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)] + [(100, 101)], "id_a long, id_b long"
+    )
+    before = _persistent_rdds(spark)
+    stats: dict = {}
+    out = connected_components(chain, stats=stats)
+    assert stats["rounds"] >= 2  # several label tables were superseded
+    assert len(_persistent_rdds(spark) - before) == 1
+    got = {r["v"]: r["component"] for r in out.collect()}
+    assert got == {**{i: 0 for i in range(31)}, 100: 100, 101: 100}
 
 
 def test_multiprobe_recall_measured_against_brute_force(spark, sf_dir):
@@ -366,12 +393,7 @@ def test_multiprobe_recall_measured_against_brute_force(spark, sf_dir):
     stable numbers)."""
     from pyspark.sql import Window
 
-    from hetman_spark.functions.similarity import (
-        int_dot_sim,
-        ivf_topk_multiprobe,
-        ivf_topk_quantized,
-        quantize_vec,
-    )
+    from hetman_spark.functions.similarity import int_dot_sim, quantize_vec
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = e.orderBy("vec_id").limit(3)
@@ -405,8 +427,8 @@ def test_multiprobe_recall_measured_against_brute_force(spark, sf_dir):
         return len(got & truth) / len(truth)
 
     r_single = recall(ivf_topk_quantized(e, queries, k=5, planes=2, dim=64))
-    r_multi2 = recall(ivf_topk_multiprobe(e, queries, k=5, planes=2, nprobe=2, dim=64))
-    r_multi3 = recall(ivf_topk_multiprobe(e, queries, k=5, planes=2, nprobe=3, dim=64))
+    r_multi2 = recall(ivf_topk_quantized(e, queries, k=5, planes=2, nprobe=2, dim=64))
+    r_multi3 = recall(ivf_topk_quantized(e, queries, k=5, planes=2, nprobe=3, dim=64))
     assert r_single <= r_multi2 <= r_multi3  # monotone in nprobe
     assert r_multi3 >= 0.8, f"recall@5 {r_multi3} (single {r_single})"
 
@@ -418,11 +440,10 @@ def test_multiprobe_recall_measured_against_brute_force(spark, sf_dir):
     #   nprobe=2: hyperplane 0.733  trained 0.933
     from hetman_spark.functions.similarity import ivf_topk_trained
 
-    r_t1 = recall(ivf_topk_trained(e, queries, k=5, n_cells=4, iters=3,
-                                   nprobe=1, dim=64))
-    r_t2 = recall(ivf_topk_trained(e, queries, k=5, n_cells=4, iters=3,
-                                   nprobe=2, dim=64))
-    r_h1 = recall(ivf_topk_multiprobe(e, queries, k=5, planes=2, nprobe=1, dim=64))
+    cents = train_kmeans(e, k=4, iters=3)[0]
+    r_t1 = recall(ivf_topk_trained(e, queries, cents, k=5, nprobe=1))
+    r_t2 = recall(ivf_topk_trained(e, queries, cents, k=5, nprobe=2))
+    r_h1 = recall(ivf_topk_quantized(e, queries, k=5, planes=2, nprobe=1, dim=64))
     assert r_t1 > r_h1, f"trained {r_t1} must beat hyperplane {r_h1} at nprobe=1"
     assert r_t2 > r_multi2, f"trained {r_t2} must beat hyperplane {r_multi2} at nprobe=2"
     assert r_t1 >= 0.8 and r_t2 >= 0.9  # measured floors
@@ -592,7 +613,8 @@ def test_pq_topk_recall_measured_against_brute_force(spark, sf_dir):
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     nq, k = 10, 5
     q = e.orderBy("vec_id").limit(nq)
-    got = pq_topk(e, q, k=k).collect()
+    codebooks = train_kmeans(e, k=8, iters=2, m_sub=8)
+    got = pq_topk(e, q, codebooks, k=k).collect()
     nb = {}
     for r in got:
         nb.setdefault(r["query_id"], set()).add(r["neighbor_id"])
@@ -633,7 +655,7 @@ def test_semdedup_components_and_farthest_keeper(spark):
     cents = [[1000] * 4, [-1000] * 4]
     out = {
         r["vec_id"]: r
-        for r in semdedup(df, centroids=cents, dim=4).collect()
+        for r in semdedup(df, cents).collect()
     }
     assert {v: r["cluster_id"] for v, r in out.items()} == {
         0: 0, 1: 0, 2: 0, 10: 1, 11: 1, 12: 1, 13: 1,
@@ -757,8 +779,9 @@ def test_semdedup_pandas_gram_equals_expression_path(spark, sf_dir):
     from hetman_spark.functions.similarity import semdedup
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    fast = sorted(map(tuple, semdedup(e, dim=64, pandas_gram=True).collect()))
-    slow = sorted(map(tuple, semdedup(e, dim=64, pandas_gram=False).collect()))
+    cents = train_kmeans(e, k=8, iters=3)[0]
+    fast = sorted(map(tuple, semdedup(e, cents, pandas_gram=True).collect()))
+    slow = sorted(map(tuple, semdedup(e, cents, pandas_gram=False).collect()))
     assert fast == slow and len(fast) > 0
 
 
@@ -817,14 +840,13 @@ def test_ivfpq_neighbors_come_from_probed_cells(spark, sf_dir):
         centroid_dist_array,
         ivfpq_topk,
         quantize_vec,
-        train_kmeans_centroids,
     )
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    _, cents = train_kmeans_centroids(e, 8, 3, dim=64)
+    cents = train_kmeans(e, 8, 3)[0]
     out = ivfpq_topk(
-        e, e.orderBy("vec_id").limit(3), k=5, nprobe=2,
-        centroids=cents, dim=64,
+        e, e.orderBy("vec_id").limit(3), cents,
+        train_kmeans(e, 8, 2, m_sub=8), k=5, nprobe=2,
     ).collect()
 
     q = e.select(
@@ -1100,14 +1122,13 @@ def test_ivfpq_residual_neighbors_come_from_probed_cells(spark, sf_dir):
         centroid_dist_array,
         ivfpq_topk_residual,
         quantize_vec,
-        train_kmeans_centroids,
     )
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    _, cents = train_kmeans_centroids(e, 8, 3, dim=64)
+    cents = train_kmeans(e, 8, 3)[0]
     out = ivfpq_topk_residual(
-        e, e.orderBy("vec_id").limit(3), k=5, nprobe=2,
-        centroids=cents, dim=64,
+        e, e.orderBy("vec_id").limit(3), cents,
+        _residual_codebooks(e, cents), k=5, nprobe=2,
     ).collect()
 
     q = e.select("vec_id", quantize_vec(F.col("embedding")).alias("qv"))
@@ -1137,6 +1158,16 @@ def test_ivfpq_residual_neighbors_come_from_probed_cells(spark, sf_dir):
         assert [d for _, d in ranks] == sorted(d for _, d in ranks)
 
 
+def _residual_codebooks(e, cents):
+    """PQ codebooks (8 subspaces x 8 centroids, 2 iterations) trained on
+    the residuals of `e` from its nearest centroid in `cents`."""
+    from hetman_spark.functions.similarity import residual_projection
+
+    return train_kmeans(
+        residual_projection(e, cents), 8, 2, m_sub=8, vec_col="rv", quantized=True
+    )
+
+
 def _ivfpq_recall_pair(spark, e, nq=10, k=5, nprobe=2):
     """Recall@5 of residual vs no-residual IVFADC at IDENTICAL params
     (8 cells, nprobe, m=8, ks=8) against brute-force integer-L2
@@ -1150,11 +1181,10 @@ def _ivfpq_recall_pair(spark, e, nq=10, k=5, nprobe=2):
         ivfpq_topk,
         ivfpq_topk_residual,
         quantize_vec,
-        train_kmeans_centroids,
     )
 
     qdf = e.orderBy("vec_id").limit(nq)
-    _, cents = train_kmeans_centroids(e, 8, 3, dim=64)
+    cents = train_kmeans(e, 8, 3)[0]
 
     def qz(v):
         return [math.floor(x * 1000) for x in v]
@@ -1195,11 +1225,13 @@ def _ivfpq_recall_pair(spark, e, nq=10, k=5, nprobe=2):
 
     r_res = recall(
         ivfpq_topk_residual(
-            e, qdf, k=k, nprobe=nprobe, centroids=cents, dim=64
+            e, qdf, cents, _residual_codebooks(e, cents), k=k, nprobe=nprobe
         ).collect()
     )
     r_raw = recall(
-        ivfpq_topk(e, qdf, k=k, nprobe=nprobe, centroids=cents, dim=64).collect()
+        ivfpq_topk(
+            e, qdf, cents, train_kmeans(e, 8, 2, m_sub=8), k=k, nprobe=nprobe
+        ).collect()
     )
     return r_res, r_raw
 

@@ -91,18 +91,36 @@ def test_band_pair_entries_are_bucketed(spark, sf_dir):
 
 
 def test_ivf_trained_probe_is_bucketed_and_broadcast(spark, sf_dir):
-    """The trained-centroid IVF probe must stay a broadcast hash join
-    keyed on the cell — the corpus side never cross-joins the queries
-    (r4 VERDICT #1's scale condition)."""
-    from hetman_spark.functions.similarity import ivf_topk_trained
+    """Every cell-probing IVF index — trained centroids, hyperplane
+    cells with one or several probes, and both IVFADC variants — must
+    stay a broadcast hash join keyed on the cell: the corpus side never
+    cross-joins the queries (r4 VERDICT #1's scale condition)."""
+    from hetman_spark.entry_queries import (
+        q_ivf_topk,
+        q_ivf_topk_multiprobe,
+        q_ivfpq_residual_topk,
+        q_ivfpq_topk,
+    )
+    from hetman_spark.functions.similarity import ivf_topk_trained, train_kmeans
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = e.orderBy("vec_id").limit(3)
-    df = ivf_topk_trained(e, queries, k=5, n_cells=4, iters=1, nprobe=2, dim=64)
-    plan = _physical_plan(df)
-    for shape in FORBIDDEN:
-        assert shape not in plan
-    assert "BroadcastHashJoin" in plan  # query side broadcast on cell
+    cents = train_kmeans(e, k=4, iters=1)[0]
+    trained = ivf_topk_trained(e, queries, cents, k=5, nprobe=2)
+    for df in (
+        trained,
+        q_ivf_topk(spark, sf_dir),
+        q_ivf_topk_multiprobe(spark, sf_dir),
+        q_ivfpq_topk(spark, sf_dir),
+        q_ivfpq_residual_topk(spark, sf_dir),
+    ):
+        plan = _physical_plan(df, "simple")
+        for shape in FORBIDDEN:
+            assert shape not in plan, plan
+        # query side broadcast, joined on the cell
+        assert re.search(
+            r"BroadcastHashJoin \[cell#\d+L\], \[cell#\d+L\]", plan
+        ), plan
 
 
 def test_new_text_entries_have_keyed_plans(spark, sf_dir):
@@ -253,11 +271,11 @@ def test_kmeans_assignment_is_map_side(spark):
     """The k-means assignment pass must be join-free (centroids are
     packed constants, not a joined table) — the property that keeps
     the per-iteration cost one scan + one k*dim-group aggregate."""
-    from hetman_spark.functions.similarity import kmeans_quantized
+    from hetman_spark.functions.similarity import kmeans_quantized, train_kmeans
 
     rows = [(i, [float(i % 5), float(i % 3)]) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = kmeans_quantized(df, k=2, iters=1, dim=2)
+    out = kmeans_quantized(df, train_kmeans(df, k=2, iters=1)[0])
     plan = _physical_plan(out)
     assert "Join" not in plan
 
